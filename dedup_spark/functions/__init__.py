@@ -16,6 +16,7 @@ from dedup_spark.functions.simhash import simhash_udf, simhash_blocks
 from dedup_spark.functions.signatures import doc_signature_udf, token_hashes
 from dedup_spark.functions.rolling import doc_fingerprints, window_hashes, winnow
 from dedup_spark.functions.suffix import (
+    prefix_doubling,
     suffix_array,
     lcp_array,
     longest_common_run,
@@ -28,6 +29,7 @@ __all__ = [
     "doc_fingerprints",
     "window_hashes",
     "winnow",
+    "prefix_doubling",
     "suffix_array",
     "lcp_array",
     "longest_common_run",

@@ -16,10 +16,10 @@ returning wrong labels. `localCheckpoint` after every round cuts the
 lineage that would otherwise grow the plan exponentially (SURVEY.md §4.2
 #3).
 
-Works directly on string ids (urls): labels are min-strings. No hashing of
-node ids means no 64-bit collision risk merging unrelated clusters at
-10^12-doc scale; the label column stays a short prefix-compressible string in
-Tungsten rows.
+Works on any orderable id column: `plans/pipeline.py` passes dense `long`
+nids, the checkpointed path (`plans/checkpoint.py`) url strings. Labels are
+the component's minimum id. Node ids are never hashed, so no 64-bit
+collision can merge unrelated clusters.
 """
 
 from __future__ import annotations

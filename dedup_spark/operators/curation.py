@@ -844,8 +844,7 @@ def containment_pairs(
         F.col(id_col).alias("id"), F.explode(sh_col).alias("band_key")
     )
     cand = salted_pairs_from_buckets(
-        ex, channel="containment", nsalt=cfg.bucket_salts,
-        spill_dir=cfg.spill_dir,
+        ex, channel="containment", nsalt=cfg.bucket_salts
     ).select("id_a", "id_b")
     a = docs_sh.select(F.col(id_col).alias("id_a"), F.col(sh_col).alias("_sa"))
     b = docs_sh.select(F.col(id_col).alias("id_b"), F.col(sh_col).alias("_sb"))

@@ -326,7 +326,6 @@ def cosine_near_dup_pairs(
         exploded,
         channel="embedding",
         nsalt=config.bucket_salts,
-        spill_dir=config.spill_dir,
     )
     a = v.select(F.col("id").alias("id_a"), F.col("v").alias("va"))
     b = v.select(F.col("id").alias("id_b"), F.col("v").alias("vb"))
@@ -618,7 +617,6 @@ def semantic_dedup(
         )
     cand = salted_pairs_from_buckets(
         exploded, channel="embedding", nsalt=config.bucket_salts,
-        spill_dir=config.spill_dir,
         payload_col="_dom",
         pair_predicate=lambda da, db: da == db,
     )

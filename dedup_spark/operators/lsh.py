@@ -148,7 +148,6 @@ def salted_pairs_from_buckets(
     nsalt: int,
     pair_cap_all: int = PAIR_CAP_ALL,
     pair_cap_cross: int = PAIR_CAP_CROSS,
-    spill_dir: str | None = None,
     payload_col: str | None = None,
     pair_predicate=None,
     dedup: bool = True,
@@ -178,7 +177,6 @@ def salted_pairs_from_buckets(
     spilled, re-read per tier) was built and A-B-A-measured 11% SLOWER e2e at
     600k/local[8]: collect_list partials over the ~95%-singleton bucket
     population plus the materialization cost more than the pruned re-reads.
-    ``spill_dir`` is accepted for call-site symmetry and future use.
 
     ``dedup=False`` skips the final cross-bucket ``distinct()`` and returns
     raw generated pairs (a pair co-bucketed in b bands appears up to b
@@ -297,7 +295,6 @@ def lsh_candidate_pairs(
         explode_bands(with_bands, id_col),
         channel,
         nsalt=config.bucket_salts,
-        spill_dir=config.spill_dir,
         dedup=dedup,
     )
 

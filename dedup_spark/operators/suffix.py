@@ -12,22 +12,26 @@ whole-file hash confirms) to substring similarity:
   stage 2 (group)  : fingerprint buckets, deduped by member set (near-dup
                      pairs share many fingerprints; one SA per distinct
                      member set instead of one per fingerprint).
-  stage 3 (verify) : ONE suffix array + Kasai LCP per bucket
-                     (functions/suffix.bucket_repeat_pairs via applyInPandas)
-                     extracts every pair sharing a run >= min_run_tokens —
-                     amortized over the bucket, versus rebuilding an SA per
-                     candidate pair. Hot buckets (> pair_cap_all members, the
-                     boilerplate case) instead emit salted star candidates
-                     (operators/lsh) verified pair-at-a-time, bounding both
-                     the SA size and the pair count; hot-bucket pairs carry
-                     exact run lengths from `longest_common_run`.
+  stage 3 (verify) : one vectorized suffix array + LCP pass per distinct
+                     member set (functions/suffix.bucket_repeat_pairs, numpy
+                     prefix doubling, binary-lifted LCP and segment ops, in a
+                     grouped-map pandas UDF) extracts every pair sharing a
+                     run >= min_run_tokens — amortized over the set, versus
+                     rebuilding an SA per candidate pair. Hot buckets
+                     (> pair_cap_all members, the boilerplate case) instead
+                     emit salted star candidates (operators/lsh), bounding
+                     both the SA size and the pair count; each star edge
+                     joins the same set stream as a 2-member set, so one
+                     distinct, one token join and one SA pass verify both.
 
 Scale: stage 1 is O(tokens) per doc and embarrassingly parallel; stage 2 is
 one shuffle on fingerprint with map-side-combined counts; stage 3 tasks are
-bounded by pair_cap_all members per SA group. Token arrays are the heavy
-column — spill-checkpointed once, never carried past this channel.
-`run_tokens` from bucket verification is a lower bound >= min_run (exact for
-SA-adjacent suffixes); pair membership is exact either way.
+bounded by pair_cap_all members per SA group and spread over the session's
+shuffle partitions. Token arrays, the heavy column, are built only for
+members of pair-capable buckets, straight into the verify join, and never
+carried past this channel. `run_tokens` is exact for 2-member sets (every
+hot-tier pair) and SA-adjacent suffixes, otherwise a lower bound >= min_run;
+pair membership is exact either way.
 """
 
 from __future__ import annotations
@@ -41,7 +45,7 @@ from pyspark.sql.types import ArrayType, LongType
 from dedup_spark.config import DedupConfig, DEFAULT_CONFIG
 from dedup_spark.functions.rolling import doc_fingerprints
 from dedup_spark.functions.signatures import token_hashes
-from dedup_spark.functions.suffix import bucket_repeat_pairs, longest_common_run
+from dedup_spark.functions.suffix import bucket_repeat_pairs
 from dedup_spark.operators.lsh import salted_pairs_from_buckets
 
 
@@ -55,64 +59,76 @@ def fingerprint_udf(config: DedupConfig):
     return _fp
 
 
-def common_run_udf():
-    @F.pandas_udf(LongType())
-    def _run(tok_a: pd.Series, tok_b: pd.Series) -> pd.Series:
-        out = np.zeros(len(tok_a), dtype=np.int64)
-        for i, (a, b) in enumerate(zip(tok_a, tok_b)):
-            if a is not None and b is not None and len(a) and len(b):
-                out[i] = longest_common_run(
-                    np.asarray(a, dtype=np.int64), np.asarray(b, dtype=np.int64)
-                )
-        return pd.Series(out)
-
-    return _run
-
-
 def _bucket_verify_fn(min_run: int):
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = list(pdf["id"])
-        arrs = [np.asarray(t, dtype=np.int64) for t in pdf["tok"]]
-        rows = []
-        for a, b, r in bucket_repeat_pairs(arrs, min_run):
-            ia, ib = ids[a], ids[b]
-            if ib < ia:
-                ia, ib = ib, ia
-            rows.append((ia, ib, r))
-        return pd.DataFrame(rows, columns=["id_a", "id_b", "run_tokens"])
+        # id order fixes the doc ordinals, so ord_a < ord_b maps to
+        # id_a < id_b and the kernel's input does not depend on row order
+        pdf = pdf.sort_values("id", kind="stable")
+        ids = pdf["id"].to_numpy()
+        p = bucket_repeat_pairs(
+            [np.asarray(t, dtype=np.int64) for t in pdf["tok"]], min_run
+        )
+        return pd.DataFrame(
+            {"id_a": ids[p[:, 0]], "id_b": ids[p[:, 1]], "run_tokens": p[:, 2]}
+        )
 
     return fn
 
 
 def verify_fp_buckets(
-    exploded: DataFrame, toks: DataFrame, config: DedupConfig
+    exploded: DataFrame,
+    toks: DataFrame,
+    config: DedupConfig,
+    pair_cands: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact SA verification over SMALL fingerprint buckets.
+    """Exact SA verification of member sets: fingerprint buckets plus
+    optional candidate pairs, in one pass.
 
     exploded(id, fp) lists bucket membership (caller guarantees every bucket
-    is within the exhaustive cap), toks(id, tok) supplies token arrays for at
-    least every id in `exploded`. Buckets are deduped by member SET first
-    (near-dup pairs share many fingerprints: one suffix array per distinct
-    doc set, not per fingerprint), then one SA + Kasai LCP per set extracts
-    (id_a, id_b, run_tokens) for every pair sharing a run of
-    >= config.suffix_min_run_tokens tokens. Shared by the full channel
-    (suffix_repeat_pairs below) and the incremental resume path
-    (plans/incremental.py), so the two can never drift."""
+    is within the exhaustive cap); pair_cands(id_a, id_b), when given, adds
+    each candidate as a 2-member set (the suffix channel's hot-tier star
+    edges); toks(id, tok) supplies token arrays for at least every id in
+    either. Sets are deduped first (near-dup pairs share many fingerprints:
+    one suffix array per distinct doc set, not per fingerprint), then one
+    vectorized SA + LCP pass per set (functions/suffix.bucket_repeat_pairs)
+    extracts (id_a, id_b, run_tokens) for every pair sharing a run of
+    >= config.suffix_min_run_tokens tokens. For a 2-member set run_tokens is
+    the exact longest common run.
+
+    The grouped-map UDF reads from an explicit repartition on the set key
+    with the session's shuffle-partition count. It satisfies the grouping's
+    distribution, so it adds no exchange, and AQE never coalesces it: the
+    CPU-heavy verify stays spread over every core instead of collapsing
+    onto the one or two tasks its small shuffle would coalesce to.
+
+    Shared by the full channel (suffix_repeat_pairs below) and the
+    incremental resume path (plans/incremental.py), so the two can never
+    drift."""
     id_type = dict(zip(toks.schema.names, toks.schema))["id"].dataType.simpleString()
-    small_sets = (
+    sets = (
         exploded.groupBy("fp")
         .agg(F.sort_array(F.collect_list("id")).alias("members"))
         .filter(F.size("members") >= 2)
         .select("members")
-        .distinct()
-        .withColumn("bkt", F.xxhash64("members"))
     )
-    flat = small_sets.select("bkt", F.explode("members").alias("id")).join(
-        toks, "id"
-    )
-    return flat.groupBy("bkt").applyInPandas(
-        _bucket_verify_fn(config.suffix_min_run_tokens),
-        schema=f"id_a {id_type}, id_b {id_type}, run_tokens long",
+    if pair_cands is not None:
+        sets = sets.unionByName(
+            pair_cands.select(
+                F.array(
+                    F.least("id_a", "id_b"), F.greatest("id_a", "id_b")
+                ).alias("members")
+            )
+        )
+    sets = sets.distinct().withColumn("bkt", F.xxhash64("members"))
+    flat = sets.select("bkt", F.explode("members").alias("id")).join(toks, "id")
+    nparts = int(toks.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return (
+        flat.repartition(nparts, "bkt")
+        .groupBy("bkt")
+        .applyInPandas(
+            _bucket_verify_fn(config.suffix_min_run_tokens),
+            schema=f"id_a {id_type}, id_b {id_type}, run_tokens long",
+        )
     )
 
 
@@ -136,26 +152,24 @@ def suffix_repeat_pairs(
     on `docs` (the checkpointed path stores per-doc fingerprints in the
     per-partition prepared stage so a resume never re-winnows unchanged
     partitions — plans/checkpoint.py). When given, the O(tokens) winnow UDF
-    is skipped entirely and token arrays are built for ONLY the docs that
-    land in a pair-capable bucket (the boilerplate-heavy minority), instead
-    of the whole corpus.
+    is skipped entirely.
+
+    Either way, token arrays are built for ONLY the docs that land in a
+    pair-capable bucket (the boilerplate-heavy minority), instead of the
+    whole corpus, and feed the verify join directly.
     """
     from dedup_spark.plans.pipeline import spill
 
     if fps_col is None:
-        toks = docs.select(
-            F.col(id_col).alias("id"), token_hashes(text_col).alias("tok")
-        ).filter(F.size("tok") > 0)
-        # wide array column consumed by fingerprints + both verify paths:
-        # parquet spill-checkpoint, NOT .persist() (on-heap columnar cache of
-        # wide arrays anti-scales; see config.spill_dir)
-        toks = spill(toks, config, "suffix_toks")
-
-        fps = toks.select("id", fingerprint_udf(config)("tok").alias("fps"))
-        # consumed by counts + the eligible semi-join + the hot semi-join, and
-        # the hot branch feeds salted_pairs_from_buckets which reads ITS input
-        # up to 4x — without a spill the O(tokens) fingerprint UDF re-runs per
-        # read (the exact violation the generator's docstring warns about)
+        fps = docs.select(
+            F.col(id_col).alias("id"),
+            fingerprint_udf(config)(token_hashes(text_col)).alias("fps"),
+        )
+        # consumed by counts + the eligible semi-join + the hot semi-join +
+        # the token-array semi-join, and the hot branch feeds
+        # salted_pairs_from_buckets which reads ITS input up to 4x — without
+        # a spill the O(tokens) fingerprint UDF re-runs per read (the exact
+        # violation the generator's docstring warns about)
         fps = spill(fps, config, "suffix_fps")
     else:
         # precomputed fingerprints: column-pruned reads of the caller's
@@ -167,63 +181,40 @@ def suffix_repeat_pairs(
     cap = (2**31 - 1) if pair_cap_all is None else pair_cap_all
     counts = exploded.groupBy("fp").agg(F.count(F.lit(1)).alias("_n"))
     hot_keys = counts.filter(F.col("_n") > F.lit(cap)).select("fp")
-    if fps_col is not None:
-        # token arrays only for docs both verify paths can actually touch:
-        # members of some >= 2-member bucket
-        needed = (
-            exploded.join(
-                counts.filter(F.col("_n") >= 2).select("fp"), "fp", "left_semi"
-            )
-            .select(F.col("id").alias(id_col))
-            .distinct()
-        )
-        toks = spill(
-            docs.join(needed, id_col, "left_semi")
-            .select(F.col(id_col).alias("id"), token_hashes(text_col).alias("tok"))
-            .filter(F.size("tok") > 0),
-            config,
-            "suffix_toks",
-        )
+    pairable = counts.filter(F.col("_n") >= 2).select("fp")
+    needed = exploded.join(pairable, "fp", "left_semi").select(
+        F.col("id").alias(id_col)
+    )
+    toks = (
+        docs.join(needed, id_col, "left_semi")
+        .select(F.col(id_col).alias("id"), token_hashes(text_col).alias("tok"))
+        .filter(F.size("tok") > 0)
+    )
 
     # small buckets: keep only 2..cap-member buckets before the heavy
     # collect_list (singleton fingerprints — the vast majority — can never
-    # pair), then dedupe by member set (one SA per distinct doc set, not per
-    # fingerprint)
+    # pair). Hot buckets emit salted star candidates instead; with
+    # pair_cap_cross = cap too, everything over the caller's cap goes
+    # straight to the star (the generator's default mid tier, cap+1..1024
+    # exhaustive in one task, would put a 1024-member boilerplate bucket's
+    # C(1024,2) ~ 524k pairs through the SA verify; the star bounds that to
+    # ~members x salts). Both feed one set stream: each star edge is a
+    # 2-member set verified by the same SA pass.
     eligible = counts.filter(
         (F.col("_n") >= 2) & (F.col("_n") <= F.lit(cap))
     ).select("fp")
-    small_pairs = verify_fp_buckets(
-        exploded.join(eligible, "fp", "left_semi"), toks, config
-    )
-
-    # hot buckets: salted star candidates + per-pair exact verification
     hot = exploded.join(hot_keys, "fp", "left_semi").select(
         "id", F.col("fp").alias("band_key")
     )
-    # pair_cap_cross = cap too: everything over the caller's cap goes
-    # straight to the salted star (the documented hot-bucket design). The
-    # generator's default mid tier (cap+1..1024, exhaustive in one task) is
-    # fine for 8-byte band keys but NOT here — each suffix pair carries two
-    # FULL token arrays through the verify join, so a 1024-member
-    # boilerplate bucket would ship C(1024,2)≈524k token-array pairs; the
-    # star bounds that to ~members x salts.
     hot_cand = salted_pairs_from_buckets(
         hot, channel="suffix", nsalt=config.bucket_salts, pair_cap_all=cap,
-        pair_cap_cross=cap, spill_dir=config.spill_dir,
-    ).select("id_a", "id_b")
-    a = toks.select(F.col("id").alias("id_a"), F.col("tok").alias("tok_a"))
-    b = toks.select(F.col("id").alias("id_b"), F.col("tok").alias("tok_b"))
-    hot_pairs = (
-        hot_cand.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn("run_tokens", common_run_udf()(F.col("tok_a"), F.col("tok_b")))
-        .filter(F.col("run_tokens") >= config.suffix_min_run_tokens)
-        .select("id_a", "id_b", "run_tokens")
+        pair_cap_cross=cap, dedup=False,
     )
-
+    pairs = verify_fp_buckets(
+        exploded.join(eligible, "fp", "left_semi"), toks, config, hot_cand
+    )
     return (
-        small_pairs.unionByName(hot_pairs)
-        .groupBy("id_a", "id_b")
+        pairs.groupBy("id_a", "id_b")
         .agg(F.max("run_tokens").alias("run_tokens"))
         .withColumn("channel", F.lit("suffix"))
     )

@@ -296,8 +296,12 @@ def incremental_pairs(
     # The suffix channel stars at PAIR_CAP_ALL (each suffix pair carries two
     # full token arrays through its verify, so its exhaustive tier is the
     # small cap — operators/suffix.py), the near channels at PAIR_CAP_CROSS.
-    hot = (
-        old_buckets.unionByName(new_buckets)
+    # The reason names one channel by a fixed precedence, near before
+    # suffix: the near channels run in every config and suffix is opt-in, so
+    # turning suffix on never changes the reason a near-hot corpus reports.
+    hot = {
+        r["channel"]
+        for r in old_buckets.unionByName(new_buckets)
         .filter(
             (
                 F.col("channel").isin("minhash", "simhash")
@@ -306,12 +310,13 @@ def incremental_pairs(
             | ((F.col("channel") == "suffix") & (F.col("n") > PAIR_CAP_ALL))
         )
         .select("channel")
-        .limit(1)
+        .distinct()
         .collect()
-    )
+    }
+    if hot & {"minhash", "simhash"}:
+        return None, "ultra_hot_near_bucket"
     if hot:
-        which = "suffix" if hot[0]["channel"] == "suffix" else "near"
-        return None, f"ultra_hot_{which}_bucket"
+        return None, "ultra_hot_suffix_bucket"
 
     # changed docs: (url, dhash) symmetric difference old vs new
     o = old_docsig.select("url", F.col("dhash").alias("_od"))
@@ -395,7 +400,6 @@ def incremental_pairs(
             exploded_m,
             channel="minhash",
             nsalt=config.bucket_salts,
-            spill_dir=config.spill_dir,
         )
     )
     cs = stale.filter(F.col("channel") == "simhash").select("bkey")
@@ -410,7 +414,6 @@ def incremental_pairs(
             exploded_s,
             channel="simhash",
             nsalt=config.bucket_salts,
-            spill_dir=config.spill_dir,
             payload_col="_p",
             pair_predicate=lambda pa, pb: hamming_distance(pa, pb) <= hmax,
         ).select("id_a", "id_b", "channel")

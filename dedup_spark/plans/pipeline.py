@@ -164,7 +164,6 @@ def simhash_candidate_pairs(
         exploded,
         channel="simhash",
         nsalt=config.bucket_salts,
-        spill_dir=config.spill_dir,
         payload_col="_p",
         pair_predicate=lambda pa, pb: hamming_distance(pa, pb) <= hmax,
         dedup=dedup,

@@ -212,7 +212,7 @@ def n7_jaccard_pairs(spark, sf_dir, threshold: float = 0.2):
         F.explode("shingle_hashes").alias("band_key"),
     )
     cand = salted_pairs_from_buckets(
-        ex, channel="jaccard", nsalt=CFG.bucket_salts, spill_dir=CFG.spill_dir
+        ex, channel="jaccard", nsalt=CFG.bucket_salts
     ).select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
     a = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingle_hashes").alias("sh_a"))
     b = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingle_hashes").alias("sh_b"))
@@ -242,9 +242,9 @@ def n8_connected_components(spark, sf_dir):
 
 
 # N6: suffix-array channel — doc pairs sharing a repeated run of >= 20 tokens.
-# Winnowed rolling-hash fingerprints prune, suffix array + Kasai LCP verifies
-# exactly; the DuckDB oracle enumerates all 20-token windows and joins —
-# identical pair sets because the channel's recall is 1.0 at >= min_run.
+# Winnowed rolling-hash fingerprints prune, a vectorized suffix array + LCP
+# verifies exactly; the DuckDB oracle enumerates all 20-token windows and
+# joins — identical pair sets because the channel's recall is 1.0 at >= min_run.
 def n6_suffix_pairs(spark, sf_dir, min_run: int = 20):
     from dedup_spark.operators.suffix import suffix_repeat_pairs
 
@@ -446,7 +446,7 @@ def n4_recall_vs_oracle(spark, sf_dir, threshold: float = 0.7):
     # silently star-capping truth.
     cand = salted_pairs_from_buckets(
         ex, channel="truth", nsalt=CFG.bucket_salts,
-        pair_cap_cross=2**31 - 1, spill_dir=CFG.spill_dir,
+        pair_cap_cross=2**31 - 1,
     ).select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
     a = sh.select(F.col("doc_id").alias("doc_a"), F.col("shingle_hashes").alias("sh_a"))
     b = sh.select(F.col("doc_id").alias("doc_b"), F.col("shingle_hashes").alias("sh_b"))

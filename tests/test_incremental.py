@@ -350,6 +350,39 @@ def test_suffix_hot_bucket_falls_back_to_full(
     assert _members_set(out) == _members_set(full)
 
 
+def test_near_and_suffix_hot_reports_near_first(
+    spark, suffix_pages, suffix_config, root, monkeypatch
+):
+    """With a near bucket AND a suffix bucket over their star caps, the
+    fallback reason follows the fixed precedence near before suffix, not
+    whichever offending row a scan happens to return first."""
+    import dedup_spark.plans.incremental as incr_mod
+
+    ts = datetime.datetime(2024, 1, 1)
+    body = _stext(200, 90)
+    twins = spark.createDataFrame(
+        [
+            ("https://s/n1", ts, body, "en", "src0"),
+            ("https://s/n2", ts, body + " tail", "en", "src1"),
+        ],
+        suffix_pages.schema,
+    )
+    pages = suffix_pages.unionByName(twins)
+    run_dedup_checkpointed(pages, suffix_config, root)
+    monkeypatch.setattr(incr_mod, "PAIR_CAP_CROSS", 1)
+    monkeypatch.setattr(incr_mod, "PAIR_CAP_ALL", 1)
+    edited = pages.withColumn(
+        "text",
+        F.when(
+            F.col("url") == "https://s/u0",
+            F.concat("text", F.lit(" EDITED")),
+        ).otherwise(F.col("text")),
+    )
+    run2 = CheckpointedRun(spark, root, suffix_config)
+    run_dedup_checkpointed(edited, suffix_config, root, run=run2)
+    assert run2.pairs_mode == "full(ultra_hot_near_bucket)"
+
+
 def test_fallback_reason_lands_in_metrics(
     spark, pages, config, root, monkeypatch
 ):

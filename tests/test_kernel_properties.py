@@ -17,6 +17,9 @@ hashing (/root/reference/src/find_duplicates_map.cpp hash-then-verify):
   channel's recall floor).
 - suffix_array/lcp_array match naive sorted-suffix / common-prefix
   computation; longest_common_run matches an O(n*m) DP.
+- The vectorized suffix kernels (fence_concat, binary-lifted lcp_array,
+  segment-op bucket_repeat_pairs) return exactly what the loop references
+  in tests/suffix_reference.py return (Kasai LCP, per-interval pair loop).
 
 No SparkSession — pure numpy/pandas, so hypothesis can afford hundreds of
 examples per property.
@@ -26,15 +29,23 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from dedup_spark.functions.minhash import fold31, minhash_batch
 from dedup_spark.functions.rolling import doc_fingerprints, window_hashes, winnow
 from dedup_spark.functions.simhash import simhash_batch
 from dedup_spark.functions.suffix import (
+    bucket_repeat_pairs,
+    fence_concat,
     lcp_array,
     longest_common_run,
+    prefix_doubling,
     suffix_array,
+)
+from suffix_reference import (
+    bucket_repeat_pairs_loop,
+    fence_concat_loop,
+    kasai_lcp,
 )
 
 I64 = st.integers(min_value=-(2**63), max_value=2**63 - 1)
@@ -161,8 +172,8 @@ def test_suffix_array_matches_naive_sort(toks):
 @given(st.lists(SMALL_TOK, min_size=1, max_size=40))
 def test_lcp_matches_naive(toks):
     seq = np.array(toks, dtype=np.int64)
-    sa = suffix_array(seq)
-    lcp = lcp_array(seq, sa)
+    sa, ranks = prefix_doubling(seq)
+    lcp = lcp_array(sa, ranks)
     assert lcp[0] == 0
     for r in range(1, len(seq)):
         a, b = seq[sa[r - 1]:], seq[sa[r]:]
@@ -192,6 +203,45 @@ def test_longest_common_run_matches_dp(a, b):
     assert longest_common_run(
         np.array(a, dtype=np.int64), np.array(b, dtype=np.int64)
     ) == _naive_lcs_run(a, b)
+
+
+# small-alphabet buckets: alphabet size 2..5, 1..6 docs of 0..30 tokens
+# (empty docs and docs shorter than min_run included)
+BUCKETS = st.integers(min_value=2, max_value=5).flatmap(
+    lambda alpha: st.lists(
+        st.lists(st.integers(min_value=0, max_value=alpha - 1), max_size=30),
+        min_size=1,
+        max_size=6,
+    )
+)
+
+
+@settings(max_examples=300, deadline=None)
+@given(BUCKETS)
+@example([[]])
+@example([[], [], [0, 1]])
+@example([[0, 1, 0, 1, 0, 1]])
+def test_lcp_matches_kasai_reference(docs):
+    arrays = [np.array(d, dtype=np.int64) for d in docs]
+    seq, doc_of = fence_concat(arrays)
+    ref_seq, ref_doc_of = fence_concat_loop(arrays)
+    assert seq.tolist() == ref_seq.tolist()
+    assert doc_of.tolist() == ref_doc_of.tolist()
+    sa, ranks = prefix_doubling(seq)
+    assert lcp_array(sa, ranks).tolist() == kasai_lcp(seq, sa).tolist()
+
+
+@settings(max_examples=400, deadline=None)
+@given(BUCKETS, st.integers(min_value=1, max_value=8))
+@example([[]], 1)
+@example([[0, 1, 1, 0]], 2)
+@example([[], [0, 1, 0], []], 1)
+@example([[0, 1], [0, 1]], 3)  # docs shorter than min_run
+@example([[0, 1, 0, 1, 1], [1, 0, 1, 1], [0, 1, 1, 0, 1]], 2)
+def test_bucket_repeat_pairs_matches_loop_reference(docs, min_run):
+    arrays = [np.array(d, dtype=np.int64) for d in docs]
+    got = [tuple(map(int, r)) for r in bucket_repeat_pairs(arrays, min_run)]
+    assert got == bucket_repeat_pairs_loop(arrays, min_run)
 
 
 # --- lazy verification shingles (plans/pipeline.py): the engine computes

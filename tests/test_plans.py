@@ -212,15 +212,59 @@ def test_salted_pair_generator_bounded_input_reads(spark, tmp_path):
         "id", F.pmod(F.xxhash64("id"), F.lit(700)).alias("band_key")
     ).write.parquet(src)
     exploded = spark.read.parquet(src)
-    pairs = salted_pairs_from_buckets(
-        exploded, "x", nsalt=4, spill_dir=str(tmp_path)
-    )
+    pairs = salted_pairs_from_buckets(exploded, "x", nsalt=4)
     plan = plan_of(pairs)
     # 6 static scans = 3 tier branches x (input + its counts semi-join build
     # side); the counts exchange is identical across branches and reused at
     # runtime. The old triangulated shape statically scanned it 8x.
     assert plan.count("exploded_input") <= 6, plan
     assert "sequence(" not in plan, plan
+
+
+def test_suffix_verify_reads_user_repartition_no_aqe_coalesce(spark):
+    """The suffix channel verifies every member set (small buckets and
+    hot-tier star edges) in ONE grouped-map pandas UDF, fed by the user
+    `repartition(<session shuffle partitions>, "bkt")` with no second
+    exchange in between. AQE never coalesces a repartition by number, so the
+    CPU-heavy SA verify cannot silently fall back onto one task; the
+    executed plan must show no AQEShuffleRead above that exchange."""
+    from dedup_spark.config import DedupConfig
+    from dedup_spark.operators.suffix import suffix_repeat_pairs
+
+    words = [f"w{i}" for i in range(300)]
+    shared = " ".join(words[:80])
+    docs = spark.createDataFrame(
+        [(i, " ".join(words[100 + 20 * i : 120 + 20 * i]) + " " + shared)
+         for i in range(6)],
+        "id long, text string",
+    )
+    out = suffix_repeat_pairs(
+        docs, DedupConfig(shuffle_partitions=8), pair_cap_all=4
+    )
+    nparts = spark.conf.get("spark.sql.shuffle.partitions")
+    plan = plan_of(out)
+    tree = plan.split("\n\n")[0]
+    assert tree.count("FlatMapGroupsInPandas") == 1, plan
+    assert "EvalPython" not in plan, plan  # no per-pair verify UDF
+    below = []
+    for line in tree[tree.index("FlatMapGroupsInPandas"):].splitlines()[1:]:
+        name, node = re.search(r"(\w+) \((\d+)\)$", line).groups()
+        if name == "Exchange":
+            break
+        below.append(name)
+    assert set(below) <= {"Sort", "Project"}, plan
+    detail = plan[plan.index(f"({node}) Exchange"):]
+    args = re.search(r"Arguments: (.*)", detail).group(1)
+    assert re.match(
+        rf"hashpartitioning\(bkt#\d+L, {nparts}\), REPARTITION_BY_NUM", args
+    ), args
+
+    rows = out.collect()  # hot-tier star edges, each an exact 2-doc run
+    assert rows and all(r.run_tokens == 80 for r in rows), rows
+    final = out._jdf.queryExecution().executedPlan().toString()
+    above = final[final.index("FlatMapGroupsInPandas"):]
+    above = above[: above.index("Exchange")]
+    assert "AQEShuffleRead" not in above, final
 
 
 def test_jsonl_ingest_stays_jvm_side(spark, tmp_path):

@@ -11,31 +11,21 @@ from dedup_spark.functions.suffix import (
     bucket_repeat_pairs,
     lcp_array,
     longest_common_run,
-    suffix_array,
+    prefix_doubling,
 )
 from dedup_spark.operators.suffix import suffix_repeat_pairs
+from suffix_reference import brute_common_run
 
 RNG = np.random.default_rng(7)
-
-
-def _brute_lcr(a, b):
-    best = 0
-    for i in range(len(a)):
-        for j in range(len(b)):
-            m = 0
-            while i + m < len(a) and j + m < len(b) and a[i + m] == b[j + m]:
-                m += 1
-            best = max(best, m)
-    return best
 
 
 def test_suffix_array_vs_brute():
     for _ in range(30):
         n = int(RNG.integers(1, 50))
         seq = RNG.integers(0, 5, size=n).astype(np.int64)
-        sa = suffix_array(seq)
+        sa, ranks = prefix_doubling(seq)
         assert sa.tolist() == sorted(range(n), key=lambda i: seq[i:].tolist())
-        lcp = lcp_array(seq, sa)
+        lcp = lcp_array(sa, ranks)
         for i in range(1, n):
             a, b = seq[sa[i - 1]:], seq[sa[i]:]
             m = 0
@@ -48,7 +38,7 @@ def test_longest_common_run_vs_brute():
     for _ in range(30):
         a = RNG.integers(0, 5, size=int(RNG.integers(0, 30))).astype(np.int64)
         b = RNG.integers(0, 5, size=int(RNG.integers(0, 30))).astype(np.int64)
-        assert longest_common_run(a, b) == _brute_lcr(a, b)
+        assert longest_common_run(a, b) == brute_common_run(a, b)
 
 
 def test_window_hash_position_independent():
@@ -139,6 +129,30 @@ def test_suffix_repeat_pairs_spark(spark, suffix_docs):
     }
     assert (out.run_tokens >= 50).all()
     assert (out.channel == "suffix").all()
+
+
+def test_hot_tier_run_tokens_are_exact(spark, suffix_docs):
+    """pair_cap_all=2 puts the 3-member {a, b, e} fingerprint buckets on the
+    salted star tier, which keeps connectivity, not every pair. Each star
+    edge is verified as a 2-member set, so every row carries the exact
+    longest common run of its two token arrays."""
+    from dedup_spark.functions.signatures import token_hashes
+
+    cfg = DedupConfig(suffix_min_run_tokens=50, shuffle_partitions=8)
+    out = suffix_repeat_pairs(suffix_docs, cfg, pair_cap_all=2).toPandas()
+    got = {frozenset((r.id_a, r.id_b)) for r in out.itertuples()}
+    assert len(got) >= 2 and got <= {
+        frozenset(("a", "b")),
+        frozenset(("a", "e")),
+        frozenset(("b", "e")),
+    }
+    assert set().union(*got) == {"a", "b", "e"}
+    toks = {
+        r.id: np.asarray(r.tok, dtype=np.int64)
+        for r in suffix_docs.select("id", token_hashes("text").alias("tok")).collect()
+    }
+    for r in out.itertuples():
+        assert r.run_tokens == brute_common_run(toks[r.id_a], toks[r.id_b])
 
 
 def test_suffix_channel_in_pipeline(spark):
