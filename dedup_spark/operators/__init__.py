@@ -3,7 +3,7 @@ north-rule extension; all are pure DataFrame -> DataFrame functions."""
 
 from dedup_spark.operators.scan import ingest_pages
 from dedup_spark.operators.exact import exact_dup_members, prune_non_candidates
-from dedup_spark.operators.lsh import lsh_candidate_pairs, pairs_from_buckets
+from dedup_spark.operators.lsh import lsh_candidate_pairs
 from dedup_spark.operators.verify import verify_pairs_jaccard
 from dedup_spark.operators.components import connected_components
 from dedup_spark.operators.representatives import select_representatives
@@ -20,7 +20,6 @@ __all__ = [
     "exact_dup_members",
     "prune_non_candidates",
     "lsh_candidate_pairs",
-    "pairs_from_buckets",
     "verify_pairs_jaccard",
     "connected_components",
     "select_representatives",

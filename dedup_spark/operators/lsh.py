@@ -6,10 +6,10 @@ from MinHash band keys. Pair generation is the classic scale hazard: a bucket
 of n rows implies n(n-1)/2 pairs, and boilerplate pages create huge buckets.
 
 Skew strategy (explicit — Catalyst/AQE can split skewed *joins* but cannot fix
-within-group pair explosion). `salted_pairs_from_buckets`, the default scale
-path, counts bucket sizes first (one partial-aggregated shuffle; the count is
-map-side combinable so hot keys cannot straggle a reducer), then routes
-buckets by size:
+within-group pair explosion). `salted_pairs_from_buckets` counts bucket
+sizes first (one partial-aggregated shuffle; the count is map-side
+combinable so hot keys cannot straggle a reducer), then routes buckets by
+size:
 
   - buckets with n <= pair_cap_cross — the overwhelming majority — are
     exhaustive: one sorted collect_list per bucket (<= 1024 ids, 8 KB) and
@@ -43,7 +43,8 @@ from dedup_spark.config import DedupConfig, DEFAULT_CONFIG
 
 # inside ultra-hot buckets, per-salt sub-buckets emit all pairs below this
 # size and a min-id star above it (<= 2016 pairs/sub-bucket either way);
-# also the cap for the unsalted pairs_from_buckets fast path.
+# also the suffix channel's exhaustive cap and the `hot_buckets` report
+# threshold.
 PAIR_CAP_ALL = 64
 # exhaustive enumeration up to this bucket size: <= ~524k pairs/bucket from
 # one bounded task; beyond it the salted two-level star caps quadratic
@@ -60,14 +61,6 @@ PAIR_CAP_CROSS = 1024
 # buckets — extra candidates that downstream Hamming/Jaccard verification
 # filters; recall can only gain.
 _KEYS = ["band_key"]
-
-
-def explode_bands(with_bands: DataFrame, id_col: str = "id") -> DataFrame:
-    """(id, band_keys: array<long>) -> (band_key, id); keys are band-mixed."""
-    return with_bands.select(
-        F.col(id_col).alias("id"),
-        F.explode("band_keys").alias("band_key"),
-    )
 
 
 def _all_pairs(members, pred=None) -> F.Column:
@@ -110,36 +103,6 @@ def _star_pairs(members, pred=None) -> F.Column:
         F.filter(rest, lambda y: pred(hub["p"], y["p"])),
         lambda y: F.struct(hub["id"].alias("id_a"), y["id"].alias("id_b")),
     )
-
-
-def pairs_from_buckets(
-    exploded: DataFrame, channel: str, pair_cap_all: int | None = PAIR_CAP_ALL
-) -> DataFrame:
-    """(band_key, id) -> distinct candidate pairs (id_a < id_b).
-
-    One shuffle: groupBy(band_key) with sorted member lists; pairs
-    are generated inline with `transform`/`flatten` (whole-stage codegen), then
-    a distinct over (id_a, id_b) dedups across buckets.
-
-    ``pair_cap_all=None`` forces exhaustive all-pairs generation regardless of
-    bucket size (exact-enumeration mode for oracle-matched queries); the
-    default caps quadratic blowup via the star topology. NOTE: either way one
-    task collects the full bucket member list — use
-    ``salted_pairs_from_buckets`` when buckets can be arbitrarily hot.
-    """
-    buckets = exploded.groupBy(*_KEYS).agg(
-        F.sort_array(F.collect_list("id")).alias("members")
-    )
-    members = F.col("members")
-    n = F.size(members)
-    buckets = buckets.filter(n >= 2)
-    cap = F.lit(2**31 - 1) if pair_cap_all is None else F.lit(pair_cap_all)
-    pairs = buckets.select(
-        F.explode(
-            F.when(n <= cap, _all_pairs(members)).otherwise(_star_pairs(members))
-        ).alias("p")
-    ).select("p.id_a", "p.id_b")
-    return pairs.distinct().withColumn("channel", F.lit(channel))
 
 
 def salted_pairs_from_buckets(
@@ -290,13 +253,20 @@ def lsh_candidate_pairs(
 ) -> DataFrame:
     """Distinct candidate pairs from MinHash band-bucket co-membership
     (size-aware salted generation — the scale path). ``dedup=False`` defers
-    cross-bucket dedup to the caller's own pair-merge shuffle."""
-    return salted_pairs_from_buckets(
-        explode_bands(with_bands, id_col),
-        channel,
-        nsalt=config.bucket_salts,
-        dedup=dedup,
+    cross-bucket dedup to the caller's own pair-merge shuffle.
+
+    (id, band_keys) input; the buckets and pairs are the pipeline's minhash
+    channel's own (plans/pipeline.channel_keys -> near_bucket_pairs), so
+    callers of this entry point run the generator `run_dedup` runs."""
+    from dedup_spark.plans.pipeline import channel_keys, near_bucket_pairs
+
+    banded = with_bands.select(
+        F.col(id_col).alias("id"), F.col("band_keys").alias("bands")
     )
+    pairs = near_bucket_pairs(
+        channel_keys(banded, config, "minhash"), config, "minhash", dedup
+    )
+    return pairs.withColumn("channel", F.lit(channel))
 
 
 def hot_buckets(

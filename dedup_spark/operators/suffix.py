@@ -101,9 +101,7 @@ def verify_fp_buckets(
     CPU-heavy verify stays spread over every core instead of collapsing
     onto the one or two tasks its small shuffle would coalesce to.
 
-    Shared by the full channel (suffix_repeat_pairs below) and the
-    incremental resume path (plans/incremental.py), so the two can never
-    drift."""
+    Shared by both tiers of suffix_bucket_pairs below."""
     id_type = dict(zip(toks.schema.names, toks.schema))["id"].dataType.simpleString()
     sets = (
         exploded.groupBy("fp")
@@ -158,29 +156,59 @@ def suffix_repeat_pairs(
     pair-capable bucket (the boilerplate-heavy minority), instead of the
     whole corpus, and feed the verify join directly.
     """
+    from dedup_spark.plans.pipeline import channel_keys
+
+    fps = suffix_fingerprints(docs, config, id_col, text_col, fps_col)
+    return suffix_bucket_pairs(
+        channel_keys(fps, config, "suffix"), docs, config, id_col, text_col,
+        pair_cap_all,
+    )
+
+
+def suffix_fingerprints(
+    docs: DataFrame,
+    config: DedupConfig,
+    id_col: str = "id",
+    text_col: str = "text",
+    fps_col: str | None = None,
+) -> DataFrame:
+    """docs -> (id, sfps): each doc's winnowed fingerprints, read from the
+    stored `fps_col` when given, else computed by the winnow UDF."""
     from dedup_spark.plans.pipeline import spill
 
-    if fps_col is None:
-        fps = docs.select(
-            F.col(id_col).alias("id"),
-            fingerprint_udf(config)(token_hashes(text_col)).alias("fps"),
-        )
-        # consumed by counts + the eligible semi-join + the hot semi-join +
-        # the token-array semi-join, and the hot branch feeds
-        # salted_pairs_from_buckets which reads ITS input up to 4x — without
-        # a spill the O(tokens) fingerprint UDF re-runs per read (the exact
-        # violation the generator's docstring warns about)
-        fps = spill(fps, config, "suffix_fps")
-    else:
+    if fps_col is not None:
         # precomputed fingerprints: column-pruned reads of the caller's
         # already-materialized docs (no UDF behind them), so no spill needed
-        fps = docs.select(
-            F.col(id_col).alias("id"), F.col(fps_col).alias("fps")
-        ).filter(F.col("fps").isNotNull())
-    exploded = fps.select("id", F.explode("fps").alias("fp"))
-    cap = (2**31 - 1) if pair_cap_all is None else pair_cap_all
+        return docs.select(
+            F.col(id_col).alias("id"), F.col(fps_col).alias("sfps")
+        )
+    fps = docs.select(
+        F.col(id_col).alias("id"),
+        fingerprint_udf(config)(token_hashes(text_col)).alias("sfps"),
+    )
+    # consumed by counts + the eligible semi-join + the hot semi-join +
+    # the token-array semi-join, and the hot branch feeds
+    # salted_pairs_from_buckets which reads ITS input up to 4x — without
+    # a spill the O(tokens) fingerprint UDF re-runs per read (the exact
+    # violation the generator's docstring warns about)
+    return spill(fps, config, "suffix_fps")
+
+
+def suffix_bucket_pairs(
+    keys: DataFrame,
+    docs: DataFrame,
+    config: DedupConfig,
+    id_col: str = "id",
+    text_col: str = "text",
+    pair_cap_all: int | None = None,
+) -> DataFrame:
+    """Fingerprint bucket keys (id, bkey) -> the suffix channel's pairs
+    (id_a, id_b, run_tokens, channel='suffix'); `docs` supplies the text of
+    every id. Every bucket with 2..pair_cap_all members is verified whole;
+    with a cap, bigger buckets emit salted star candidates instead. With no
+    cap the star tier is not planned at all."""
+    exploded = keys.select("id", F.col("bkey").alias("fp"))
     counts = exploded.groupBy("fp").agg(F.count(F.lit(1)).alias("_n"))
-    hot_keys = counts.filter(F.col("_n") > F.lit(cap)).select("fp")
     pairable = counts.filter(F.col("_n") >= 2).select("fp")
     needed = exploded.join(pairable, "fp", "left_semi").select(
         F.col("id").alias(id_col)
@@ -190,28 +218,33 @@ def suffix_repeat_pairs(
         .select(F.col(id_col).alias("id"), token_hashes(text_col).alias("tok"))
         .filter(F.size("tok") > 0)
     )
-
-    # small buckets: keep only 2..cap-member buckets before the heavy
+    small, hot_cand = pairable, None
+    if pair_cap_all is not None:
+        # small buckets: 2..cap members. Hot buckets emit salted star
+        # candidates instead; with pair_cap_cross = cap too, everything over
+        # the caller's cap goes straight to the star (the generator's default
+        # mid tier, cap+1..1024 exhaustive in one task, would put a
+        # 1024-member boilerplate bucket's C(1024,2) ~ 524k pairs through the
+        # SA verify; the star bounds that to ~members x salts). Both feed one
+        # set stream: each star edge is a 2-member set verified by the same
+        # SA pass.
+        cap = F.lit(pair_cap_all)
+        small = counts.filter(
+            (F.col("_n") >= 2) & (F.col("_n") <= cap)
+        ).select("fp")
+        hot = exploded.join(
+            counts.filter(F.col("_n") > cap).select("fp"), "fp", "left_semi"
+        ).select("id", F.col("fp").alias("band_key"))
+        hot_cand = salted_pairs_from_buckets(
+            hot, channel="suffix", nsalt=config.bucket_salts,
+            pair_cap_all=pair_cap_all, pair_cap_cross=pair_cap_all,
+            dedup=False,
+        )
+    # the semi-join keeps only pair-capable buckets before the heavy
     # collect_list (singleton fingerprints — the vast majority — can never
-    # pair). Hot buckets emit salted star candidates instead; with
-    # pair_cap_cross = cap too, everything over the caller's cap goes
-    # straight to the star (the generator's default mid tier, cap+1..1024
-    # exhaustive in one task, would put a 1024-member boilerplate bucket's
-    # C(1024,2) ~ 524k pairs through the SA verify; the star bounds that to
-    # ~members x salts). Both feed one set stream: each star edge is a
-    # 2-member set verified by the same SA pass.
-    eligible = counts.filter(
-        (F.col("_n") >= 2) & (F.col("_n") <= F.lit(cap))
-    ).select("fp")
-    hot = exploded.join(hot_keys, "fp", "left_semi").select(
-        "id", F.col("fp").alias("band_key")
-    )
-    hot_cand = salted_pairs_from_buckets(
-        hot, channel="suffix", nsalt=config.bucket_salts, pair_cap_all=cap,
-        pair_cap_cross=cap, dedup=False,
-    )
+    # pair)
     pairs = verify_fp_buckets(
-        exploded.join(eligible, "fp", "left_semi"), toks, config, hot_cand
+        exploded.join(small, "fp", "left_semi"), toks, config, hot_cand
     )
     return (
         pairs.groupBy("id_a", "id_b")

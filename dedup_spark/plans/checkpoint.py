@@ -255,6 +255,62 @@ class CheckpointedRun:
         return self.spark.read.json(p)
 
 
+def prepare_pages(pages: DataFrame, config: DedupConfig, source: str) -> DataFrame:
+    """The prepared stage of one input partition: ingested rows (url,
+    warc_ts, text, lang, source, content_hash) plus the stored per-doc
+    features the pairs stage reads (simhash, bands, and sfps when the
+    suffix channel is on).
+
+    Per-doc signature features are computed HERE, inside the per-partition
+    resumable stage, not in the global dedup: the fused signature UDF is
+    the single most expensive per-doc stage (~25% of e2e at 600k), and it
+    is embarrassingly parallel per document — so a resume after one changed
+    Iceberg partition re-signs ONE partition, never the corpus. Docs that
+    tokenize to nothing get null features (same set the pipeline's
+    size(_tok) > 0 filter drops); the two-step select pins ONE UDF eval.
+
+    Suffix channel on: the stage ALSO computes each doc's winnowed
+    fingerprints (the O(tokens) part of the suffix channel), so a resume
+    re-winnows only changed partitions and the pairs stage can bucket/diff
+    the suffix channel from stored columns — the same re-sign-one-partition
+    story the simhash/bands features get. The signature config digest
+    covers the winnow knobs (plans/incremental.py) so stale fingerprints can
+    never replay under a changed config."""
+    from dedup_spark.functions.signatures import doc_signature_udf, token_hashes
+    from dedup_spark.functions.text import normalize_text
+    from dedup_spark.operators.scan import ingest_pages
+
+    sig_udf = doc_signature_udf(
+        config, include_signature=False, include_shingles=False
+    )
+    ing = ingest_pages(pages, config)
+    has_tok = F.size("_tok") > 0
+    out = (
+        ing.select(
+            "url", "warc_ts", "text", "lang",
+            F.lit(source).alias("source"),
+            F.xxhash64(normalize_text("text")).alias("content_hash"),
+            token_hashes("text").alias("_tok"),
+        )
+        .select(
+            "url", "warc_ts", "text", "lang", "source", "content_hash",
+            "_tok", sig_udf(F.col("_tok")).alias("_s"),
+        )
+    )
+    cols = [
+        "url", "warc_ts", "text", "lang", "source", "content_hash",
+        F.when(has_tok, F.col("_s.simhash")).alias("simhash"),
+        F.when(has_tok, F.col("_s.bands")).alias("bands"),
+    ]
+    if config.suffix_enabled:
+        from dedup_spark.operators.suffix import fingerprint_udf
+
+        cols.append(
+            F.when(has_tok, fingerprint_udf(config)(F.col("_tok"))).alias("sfps")
+        )
+    return out.select(*cols)
+
+
 def run_dedup_checkpointed(
     pages: DataFrame,
     config: DedupConfig,
@@ -271,9 +327,6 @@ def run_dedup_checkpointed(
     input partition -> that partition's signatures plus the global suffix
     recompute.
     """
-    from dedup_spark.functions.signatures import doc_signature_udf, token_hashes
-    from dedup_spark.functions.text import normalize_text
-    from dedup_spark.operators.scan import ingest_pages
     from dedup_spark.plans.incremental import (
         canonical_pages,
         pairs_config_digest,
@@ -314,51 +367,10 @@ def run_dedup_checkpointed(
     sig_cfg = signature_config_digest(config)
     fps = {r[0]: f"v3|cfg={sig_cfg}|n={r['n']},h={r['h']}" for r in fp_rows}
 
-    # Per-doc signature features are computed HERE, inside the per-partition
-    # resumable stage, not in the global dedup: the fused signature UDF is
-    # the single most expensive per-doc stage (~25% of e2e at 600k), and it
-    # is embarrassingly parallel per document — so a resume after one changed
-    # Iceberg partition re-signs ONE partition, never the corpus. Docs that
-    # tokenize to nothing get null features (same set the pipeline's
-    # size(_tok) > 0 filter drops); the two-step select pins ONE UDF eval.
-    sig_udf = doc_signature_udf(
-        config, include_signature=False, include_shingles=False
-    )
-    # suffix channel on: the per-partition stage ALSO computes each doc's
-    # winnowed fingerprints (the O(tokens) part of the suffix channel), so a
-    # resume re-winnows only changed partitions and the pairs stage can
-    # bucket/diff the suffix channel from stored columns — the same
-    # re-sign-one-partition story the simhash/bands features get. The
-    # signature config digest covers the winnow knobs (plans/incremental.py)
-    # so stale fingerprints can never replay under a changed config.
-    if config.suffix_enabled:
-        from dedup_spark.operators.suffix import fingerprint_udf
-
-        sfp_udf = fingerprint_udf(config)
-
     def _build(p: str) -> DataFrame:
-        ing = ingest_pages(pages.filter(F.col(partition_col) == p), config)
-        has_tok = F.size("_tok") > 0
-        out = (
-            ing.select(
-                "url", "warc_ts", "text", "lang",
-                F.lit(p).alias("source"),
-                F.xxhash64(normalize_text("text")).alias("content_hash"),
-                token_hashes("text").alias("_tok"),
-            )
-            .select(
-                "url", "warc_ts", "text", "lang", "source", "content_hash",
-                "_tok", sig_udf(F.col("_tok")).alias("_s"),
-            )
+        return prepare_pages(
+            pages.filter(F.col(partition_col) == p), config, source=p
         )
-        cols = [
-            "url", "warc_ts", "text", "lang", "source", "content_hash",
-            F.when(has_tok, F.col("_s.simhash")).alias("simhash"),
-            F.when(has_tok, F.col("_s.bands")).alias("bands"),
-        ]
-        if config.suffix_enabled:
-            cols.append(F.when(has_tok, sfp_udf(F.col("_tok"))).alias("sfps"))
-        return out.select(*cols)
 
     prepared = run.partitioned_stage("prepared", parts, _build, fps)
 
@@ -571,17 +583,13 @@ def _members_from_pairs(
     what keeps a resume from paying a corpus-wide shuffle here)."""
     from dedup_spark.operators.components import connected_components
     from dedup_spark.operators.representatives import select_representatives
-    from dedup_spark.plans.pipeline import merge_channel_pairs
 
-    merged = merge_channel_pairs(
-        pairs.select(
-            F.col("url_a").alias("id_a"),
-            F.col("url_b").alias("id_b"),
-            "channel",
-            "jaccard",
-        )
+    # CC reads only the edges (and distincts them itself): the per-channel
+    # rows need no provenance merge here
+    labels = connected_components(
+        pairs.select(F.col("url_a").alias("id_a"), F.col("url_b").alias("id_b")),
+        config,
     )
-    labels = connected_components(merged.select("id_a", "id_b"), config)
     idmap = prepared.select(
         "url",
         F.coalesce(

@@ -9,6 +9,12 @@ longer replays bucket pair generation + Jaccard verification over the whole
 corpus (the dominant cross-partition cost — ~50 s of a 75 s cold run at 600k
 docs / local[8]).
 
+This module builds no pairs itself. Both the full and the incremental path
+call the cold run's pair builder, `plans/pipeline.channel_pair_sets`, and
+every bucket key comes from one function, `plans/pipeline.channel_keys`,
+which the pair generators, the stale-bucket restriction and the bucket
+fingerprints below all read.
+
 Correctness model — reuse a cached verified pair only when the full
 recompute would provably emit it, and regenerate exactly the buckets the
 full recompute could disagree on:
@@ -30,23 +36,21 @@ full recompute could disagree on:
   kept iff its group's membership fingerprint is unchanged, and every
   changed group is regenerated whole (min-url hub selection is deterministic
   given membership, so unchanged groups replay bit-identically).
-- Bucket membership fingerprints: (channel, bkey, n, bit_xor(dhash)) over
-  buckets with >= 2 members, stored as a sidecar next to the cached pairs.
-  Key derivation is SHARED with the channels (bands column /
-  `simhash_exploded_keys` / xxhash64(text)) so fingerprints can never drift
-  from what the generators bucket on.
-
 - suffix pairs (r5) are pair-local for MEMBERSHIP below the star cap: the
   winnowing guarantee plus exact SA verification means "(a, b) emitted" is a
   property of (tok_a, tok_b) alone — any pair sharing a >= min_run token run
   shares a fingerprint, and the bucket SA emits exactly the qualifying pairs
   of its members. Cached suffix rows are therefore kept iff both endpoints
   are unchanged, and stale fingerprint buckets (fingerprints are per-doc
-  columns in the prepared stage when `suffix_enabled`, so the sidecar sees
-  them) are re-verified whole over their full current membership. Above
+  `sfps` columns in the prepared stage when `suffix_enabled`) are
+  re-verified whole over their full current membership. Above
   `PAIR_CAP_ALL` the channel switches to the salted star (connectivity-only
   emission depends on other members) — any old or new suffix bucket over
-  that cap refuses to the full path, mirroring the near-channel guard.
+  that cap refuses to the full path, like the near-channel guard.
+- Bucket membership fingerprints: (channel, bkey, n, bit_xor(dhash)) over
+  buckets with >= 2 members, stored as a sidecar next to the cached pairs.
+  A bucket is *stale* iff its fingerprint moved, appeared or vanished; the
+  regeneration is `channel_pair_sets` restricted to the stale buckets.
 
 Identity to the full recompute is property-pinned in
 tests/test_incremental.py (random edits across partitions, pair-set and
@@ -61,13 +65,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dedup_spark.config import DedupConfig
-from dedup_spark.operators.exact import exact_dup_members
 from dedup_spark.operators.ids import assign_dense_ids
-from dedup_spark.operators.lsh import (
-    PAIR_CAP_ALL,
-    PAIR_CAP_CROSS,
-    explode_bands,
-    salted_pairs_from_buckets,
+from dedup_spark.operators.lsh import PAIR_CAP_ALL, PAIR_CAP_CROSS
+from dedup_spark.plans.pipeline import (
+    DEFAULT_CHANNELS,
+    channel_keys,
+    channel_pair_sets,
+    enabled_channels,
+    spill,
 )
 
 PAIR_COLS = ["url_a", "url_b", "channel", "jaccard", "ghash"]
@@ -154,7 +159,6 @@ def canonical_pages(prepared: DataFrame, config: DedupConfig) -> DataFrame:
     (fingerprints, docsig, pair generation, members), and without the spill
     every read would re-run the corpus-wide agg and the dup-row window."""
     from dedup_spark.operators.scan import ingest_pages
-    from dedup_spark.plans.pipeline import spill
 
     uh = F.xxhash64("url")
     dups = spill(
@@ -185,68 +189,39 @@ def doc_signatures(prepared: DataFrame) -> DataFrame:
 
 def bucket_fingerprints(prepared: DataFrame, config: DedupConfig) -> DataFrame:
     """(channel, bkey, n, h) membership fingerprints for every pair-capable
-    (n >= 2) bucket of the exact / minhash / simhash channels.
+    (n >= 2) bucket of every enabled channel.
 
     h = bit_xor of the member docs' dhash: order-independent and sensitive to
-    any member's (url, text) change. Key derivations mirror the channels
-    exactly: exact groups key on xxhash64(text) (operators/exact.py), minhash
-    on the precomputed band-mixed `bands` keys, simhash on the shared
-    `simhash_exploded_keys` probe keys.
-    """
-    from dedup_spark.plans.pipeline import simhash_exploded_keys
-
+    any member's (url, text) change. The keys are `channel_keys` with the
+    dhash as the doc id, the same function the pair generators bucket on."""
     docs = prepared.select(
-        "url", "text", "simhash", "bands",
-        F.xxhash64("url", "text").alias("_dh"),
+        F.xxhash64("url", "text").alias("id"), *_feature_cols(prepared)
     )
-    agg = [
-        F.count(F.lit(1)).alias("n"),
-        F.bit_xor("_dh").alias("h"),
-    ]
-    exact = (
-        docs.select(F.xxhash64("text").alias("bkey"), "_dh")
-        .groupBy("bkey")
-        .agg(*agg)
-        .select(F.lit("exact").alias("channel"), "bkey", "n", "h")
-    )
-    feats = docs.filter(F.col("simhash").isNotNull())
-    minhash = (
-        explode_bands(
-            feats.select(
-                F.col("_dh").alias("id"), F.col("bands").alias("band_keys")
-            )
-        )
-        .groupBy(F.col("band_key").alias("bkey"))
-        .agg(F.count(F.lit(1)).alias("n"), F.bit_xor("id").alias("h"))
-        .select(F.lit("minhash").alias("channel"), "bkey", "n", "h")
-    )
-    simhash = (
-        simhash_exploded_keys(feats.select("_dh", "simhash"), config)
-        .groupBy(F.col("band_key").alias("bkey"))
-        .agg(F.count(F.lit(1)).alias("n"), F.bit_xor("_dh").alias("h"))
-        .select(F.lit("simhash").alias("channel"), "bkey", "n", "h")
-    )
-    out = exact.unionByName(minhash).unionByName(simhash)
-    if config.suffix_enabled and "sfps" in prepared.columns:
-        # winnowed-fingerprint buckets: the per-doc fps come from the
-        # prepared stage (same column the regen path buckets on), so the
-        # fingerprint can never drift from what the channel buckets on
-        suffix = (
-            prepared.filter(F.col("sfps").isNotNull())
-            .select(F.xxhash64("url", "text").alias("_dh"),
-                    F.explode("sfps").alias("bkey"))
+    out = None
+    for channel in enabled_channels(config):
+        fp = (
+            channel_keys(docs, config, channel)
             .groupBy("bkey")
-            .agg(*agg)
-            .select(F.lit("suffix").alias("channel"), "bkey", "n", "h")
+            .agg(F.count(F.lit(1)).alias("n"), F.bit_xor("id").alias("h"))
+            .select(F.lit(channel).alias("channel"), "bkey", "n", "h")
         )
-        out = out.unionByName(suffix)
+        out = fp if out is None else out.unionByName(fp)
     return out.filter(F.col("n") >= 2)
+
+
+def _feature_cols(prepared: DataFrame) -> list[str]:
+    """The prepared columns the pair builder reads: text plus the stored
+    signature features (and the winnow fps when the suffix channel is on,
+    so it skips its UDF)."""
+    return ["text", "simhash", "bands"] + (
+        ["sfps"] if "sfps" in prepared.columns else []
+    )
 
 
 def full_pairs(
     prepared: DataFrame,
     config: DedupConfig,
-    channels: tuple[str, ...] = ("exact", "minhash", "simhash"),
+    channels: tuple[str, ...] = DEFAULT_CHANNELS,
 ) -> DataFrame:
     """Url-level per-channel verified pairs over the whole corpus.
 
@@ -255,18 +230,12 @@ def full_pairs(
     is tiny relative to the corpus, the band explode is not. nid order
     follows url order, so hubs/min-ids match the url-granularity regen path
     bit-for-bit."""
-    from dedup_spark.plans.pipeline import channel_pair_sets, spill
-
-    if config.suffix_enabled and "suffix" not in channels:
-        channels = channels + ("suffix",)
-    cols = ["url", "text", "simhash", "bands"]
-    if "sfps" in prepared.columns:
-        cols.append("sfps")  # stored winnow fps: suffix channel skips its UDF
-    with_ids = assign_dense_ids(prepared.select(*cols), "url", "nid")
+    cols = _feature_cols(prepared)
+    with_ids = assign_dense_ids(prepared.select("url", *cols), "url", "nid")
     combined = spill(with_ids, config, "ckpt_docs")
-    docs = combined.select(F.col("nid").alias("id"), *cols[1:])
+    docs = combined.select(F.col("nid").alias("id"), *cols)
     idmap = combined.select("nid", "url")
-    pairs = channel_pair_sets(docs, config, channels)
+    pairs = channel_pair_sets(docs, config, enabled_channels(config, channels))
     a = idmap.select(F.col("nid").alias("id_a"), F.col("url").alias("url_a"))
     b = idmap.select(F.col("nid").alias("id_b"), F.col("url").alias("url_b"))
     return pairs.join(a, "id_a").join(b, "id_b").select(*PAIR_COLS)
@@ -283,14 +252,6 @@ def incremental_pairs(
 ) -> tuple[DataFrame | None, str]:
     """Incrementally updated url-level pair set, or (None, reason) when the
     reuse invariants don't hold and the caller must recompute fully."""
-    from dedup_spark.plans.pipeline import (
-        merge_near_candidates,
-        simhash_exploded_keys,
-        spill,
-        verify_near_candidates,
-    )
-    from dedup_spark.functions.simhash import hamming_distance
-
     # star-tier guard: above the cap, pair emission depends on other bucket
     # members (hub mediation) and cached rows can diverge from a recompute.
     # The suffix channel stars at PAIR_CAP_ALL (each suffix pair carries two
@@ -366,120 +327,24 @@ def incremental_pairs(
         .join(changed.select(F.col("url").alias("url_b")), "url_b", "left_anti")
     )
 
-    # ---- regenerate changed buckets (full current membership, url ids) ----
-    regen = []
-    ce = stale.filter(F.col("channel") == "exact").select(
-        F.col("bkey").alias("_th")
-    )
-    docs_e = (
-        prepared.select("url", "text")
-        .withColumn("_th", F.xxhash64("text"))
-        .join(ce, "_th", "left_semi")
-    )
-    m = exact_dup_members(docs_e, id_col="url", text_col="text", config=config)
-    regen.append(
-        m.filter(F.col("id") != F.col("exact_cluster_id")).select(
-            F.least("exact_cluster_id", "id").alias("url_a"),
-            F.greatest("exact_cluster_id", "id").alias("url_b"),
-            F.lit("exact").alias("channel"),
-            F.lit(1.0).alias("jaccard"),
-            F.col("text_hash").alias("ghash"),
-        )
+    # ---- regenerate stale buckets over their full current membership ----
+    # the cold run's pair builder, on url ids, restricted to the stale
+    # buckets (the guard above bounded every one within the exhaustive caps)
+    regen = channel_pair_sets(
+        prepared.select(F.col("url").alias("id"), *_feature_cols(prepared)),
+        config,
+        enabled_channels(config),
+        buckets=stale,
+    ).select(
+        F.col("id_a").alias("url_a"), F.col("id_b").alias("url_b"),
+        "channel", "jaccard", "ghash",
     )
 
-    feats = prepared.filter(F.col("simhash").isNotNull()).select(
-        F.col("url").alias("id"), "simhash", "bands"
+    out = (
+        kept_exact.select(*PAIR_COLS)
+        .unionByName(kept_near.select(*PAIR_COLS))
+        .unionByName(regen)
     )
-    cands = []
-    cm = stale.filter(F.col("channel") == "minhash").select("bkey")
-    exploded_m = explode_bands(
-        feats.select("id", F.col("bands").alias("band_keys"))
-    ).join(cm.select(F.col("bkey").alias("band_key")), "band_key", "left_semi")
-    cands.append(
-        salted_pairs_from_buckets(
-            exploded_m,
-            channel="minhash",
-            nsalt=config.bucket_salts,
-        )
-    )
-    cs = stale.filter(F.col("channel") == "simhash").select("bkey")
-    hmax = F.lit(config.simhash_hamming_max)
-    exploded_s = (
-        simhash_exploded_keys(feats.select("id", "simhash"), config)
-        .select("id", F.col("simhash").alias("_p"), "band_key")
-        .join(cs.select(F.col("bkey").alias("band_key")), "band_key", "left_semi")
-    )
-    cands.append(
-        salted_pairs_from_buckets(
-            exploded_s,
-            channel="simhash",
-            nsalt=config.bucket_salts,
-            payload_col="_p",
-            pair_predicate=lambda pa, pb: hamming_distance(pa, pb) <= hmax,
-        ).select("id_a", "id_b", "channel")
-    )
-    cand = merge_near_candidates(cands)
-    near = verify_near_candidates(
-        prepared.select(F.col("url").alias("id"), "text"), cand, config
-    )
-    regen.append(
-        near.select(
-            F.col("id_a").alias("url_a"),
-            F.col("id_b").alias("url_b"),
-            "channel",
-            "jaccard",
-            F.lit(None).cast("long").alias("ghash"),
-        )
-    )
-
-    if config.suffix_enabled and "sfps" in prepared.columns:
-        # stale winnow buckets, re-verified whole over their full CURRENT
-        # membership. The hot guard above already bounded every old/new
-        # suffix bucket at PAIR_CAP_ALL, so only the exhaustive small-bucket
-        # SA path is ever needed here; token arrays are recomputed for ONLY
-        # the stale buckets' members (the token_hashes lambda is cheap JVM —
-        # the O(tokens) winnow UDF is NOT re-run: its output is the stored
-        # sfps column).
-        from dedup_spark.functions.signatures import token_hashes
-        from dedup_spark.operators.suffix import verify_fp_buckets
-
-        cx = stale.filter(F.col("channel") == "suffix").select(
-            F.col("bkey").alias("fp")
-        )
-        exploded_x = (
-            prepared.filter(F.col("sfps").isNotNull())
-            .select(F.col("url").alias("id"), F.explode("sfps").alias("fp"))
-            .join(cx, "fp", "left_semi")
-        )
-        toks_x = (
-            prepared.join(
-                exploded_x.select(F.col("id").alias("url")).distinct(),
-                "url",
-                "left_semi",
-            )
-            .select(F.col("url").alias("id"), token_hashes("text").alias("tok"))
-            .filter(F.size("tok") > 0)
-        )
-        sfx = verify_fp_buckets(exploded_x, toks_x, config)
-        regen.append(
-            sfx.groupBy(
-                F.col("id_a").alias("url_a"), F.col("id_b").alias("url_b")
-            )
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .select(
-                "url_a",
-                "url_b",
-                F.lit("suffix").alias("channel"),
-                F.lit(None).cast("double").alias("jaccard"),
-                F.lit(None).cast("long").alias("ghash"),
-            )
-        )
-
-    out = kept_exact.select(*PAIR_COLS).unionByName(
-        kept_near.select(*PAIR_COLS)
-    )
-    for r in regen:
-        out = out.unionByName(r.select(*PAIR_COLS))
     # a kept pair can be re-emitted by a regenerated bucket it also lives in
     # (identical values: same docs -> same jaccard/ghash); collapse exactly
     return out.dropDuplicates(["url_a", "url_b", "channel"]), "incremental"

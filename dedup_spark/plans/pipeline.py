@@ -32,7 +32,7 @@ from dedup_spark.functions.signatures import (
 from dedup_spark.functions.simhash import hamming_distance, simhash_blocks
 from dedup_spark.operators.components import connected_components
 from dedup_spark.operators.ids import assign_dense_ids
-from dedup_spark.operators.lsh import lsh_candidate_pairs
+from dedup_spark.operators.lsh import salted_pairs_from_buckets
 from dedup_spark.operators.representatives import select_representatives
 from dedup_spark.operators.scan import ingest_pages
 from dedup_spark.operators.summarize import summarize_clusters
@@ -105,24 +105,94 @@ def spill_path(df: DataFrame, name: str, base_dir: str | None = None) -> DataFra
     return df.sparkSession.read.parquet(path)
 
 
-def simhash_exploded_keys(sims: DataFrame, config: DedupConfig) -> DataFrame:
-    """sims (with a `simhash` column) -> one probe row per (doc, probe
-    table): every input column is preserved and `band_key` is appended.
-    Shared by the SimHash pair channel and the incremental-resume bucket
-    fingerprints (plans/incremental.py), which must key buckets identically
-    or reuse decisions drift from the channel."""
-    keep = list(sims.columns)
-    return sims.select(
-        *keep,
-        F.posexplode(simhash_blocks("simhash", config)).alias(
-            "band_idx", "band_key"
-        ),
-    ).select(
-        *keep,
-        # fold the probe-table index into the key: the generator buckets on
-        # ONE long (same block value in different blocks must not co-bucket)
-        F.xxhash64("band_idx", "band_key").alias("band_key"),
+# Pair provenance priority, highest first: when several channels emit the
+# same pair, the pair merges keep the channel listed first here.
+CHANNEL_PRIORITY = ("exact", "minhash", "simhash", "suffix")
+DEFAULT_CHANNELS = ("exact", "minhash", "simhash")
+
+
+def enabled_channels(
+    config: DedupConfig, channels: tuple[str, ...] = DEFAULT_CHANNELS
+) -> tuple[str, ...]:
+    """`channels` plus the suffix channel when config.suffix_enabled."""
+    if config.suffix_enabled and "suffix" not in channels:
+        return channels + ("suffix",)
+    return channels
+
+
+def _channel_rank(channel: str) -> F.Column:
+    """Channel-name column -> its 1-based int rank in CHANNEL_PRIORITY. The
+    pair merges take an int min of the rank and decode it after
+    (_channel_name): a string-buffered min_by(channel, rank) cannot use
+    HashAggregate's mutable fixed-width buffer, so Catalyst would plan a
+    SortAggregate — a full sort of the pair stream."""
+    names = F.array(*map(F.lit, CHANNEL_PRIORITY))
+    return F.array_position(names, F.col(channel)).cast("int")
+
+
+def _channel_name(rank: str) -> F.Column:
+    """Inverse of _channel_rank."""
+    return F.element_at(F.array(*map(F.lit, CHANNEL_PRIORITY)), F.col(rank))
+
+
+def channel_keys(docs: DataFrame, config: DedupConfig, channel: str) -> DataFrame:
+    """docs -> one row per (doc, bucket key) of `channel`: the columns of
+    `docs` plus the long `bkey` the channel buckets on (the array a key is
+    exploded from is dropped). The one definition of each channel's bucket
+    key, read by the pair generators in `channel_pair_sets`, by its bucket
+    restriction, and by the resume fingerprints (plans/incremental.py), so
+    a resumed run can never bucket differently from a cold one:
+
+    - exact: xxhash64(text) (the `text_hash` of operators/exact.py);
+    - minhash: each band-mixed key of `bands`;
+    - simhash: each multi-index probe key of `simhash`, with the probe-table
+      index folded in (the generator buckets on ONE long; one block value in
+      two probe tables must not co-bucket);
+    - suffix: each winnowed fingerprint of `sfps`.
+
+    Docs with no tokens (null simhash/bands/sfps) get no near or suffix
+    keys."""
+    if channel == "exact":
+        return docs.withColumn("bkey", F.xxhash64("text"))
+    if channel == "simhash":
+        keep = docs.columns
+        return (
+            docs.filter(F.col("simhash").isNotNull())
+            .select(
+                *keep,
+                F.posexplode(simhash_blocks("simhash", config)).alias(
+                    "band_idx", "band_key"
+                ),
+            )
+            .select(*keep, F.xxhash64("band_idx", "band_key").alias("bkey"))
+        )
+    src = {"minhash": "bands", "suffix": "sfps"}[channel]
+    return docs.select(
+        *(c for c in docs.columns if c != src), F.explode(src).alias("bkey")
     )
+
+
+def near_bucket_pairs(
+    keys: DataFrame, config: DedupConfig, channel: str, dedup: bool = True
+) -> DataFrame:
+    """minhash or simhash `channel_keys` rows -> that channel's candidate
+    pairs (id_a < id_b, channel) from the size-aware salted generator
+    (operators/lsh). SimHash members carry their fingerprint as the
+    generator's payload, so the Hamming cut runs inside the bucket task."""
+    kw = {}
+    if channel == "simhash":
+        hmax = F.lit(config.simhash_hamming_max)
+        kw = dict(
+            payload_col="simhash",
+            pair_predicate=lambda pa, pb: hamming_distance(pa, pb) <= hmax,
+        )
+    return salted_pairs_from_buckets(
+        keys.withColumnRenamed("bkey", "band_key"),
+        channel=channel,
+        nsalt=config.bucket_salts,
+        dedup=dedup,
+        **kw,
+    ).select("id_a", "id_b", "channel")
 
 
 def simhash_candidate_pairs(
@@ -154,27 +224,19 @@ def simhash_candidate_pairs(
     through a distinct plus TWO fingerprint equi-joins. The emitted pair set
     is identical (property-pinned in tests/test_lsh_salting.py).
     """
-    from dedup_spark.operators.lsh import salted_pairs_from_buckets
-
-    exploded = simhash_exploded_keys(sims.select("id", "simhash"), config).select(
-        "id", F.col("simhash").alias("_p"), "band_key"
-    )
-    hmax = F.lit(config.simhash_hamming_max)
-    return salted_pairs_from_buckets(
-        exploded,
-        channel="simhash",
-        nsalt=config.bucket_salts,
-        payload_col="_p",
-        pair_predicate=lambda pa, pb: hamming_distance(pa, pb) <= hmax,
-        dedup=dedup,
-    ).select("id_a", "id_b", "channel")
+    keys = channel_keys(sims.select("id", "simhash"), config, "simhash")
+    return near_bucket_pairs(keys, config, "simhash", dedup)
 
 
 def channel_pair_sets(
-    docs: DataFrame, config: DedupConfig, channels: tuple[str, ...]
+    docs: DataFrame,
+    config: DedupConfig,
+    channels: tuple[str, ...],
+    buckets: DataFrame | None = None,
 ) -> DataFrame:
     """docs(id, text) -> per-channel verified pairs WITHOUT the final
     cross-channel priority merge: (id_a, id_b, channel, jaccard, ghash).
+    The one pair builder of both the cold run and the resumed run.
 
     `ghash` is the exact channel's content-hash group key (null for the
     other channels). Exact pairs are a hub STAR per content-equality class —
@@ -183,19 +245,37 @@ def channel_pair_sets(
     minhash/simhash rows are pair-local below the ultra-hot cap (exhaustive
     tiers emit every in-bucket pair) and need no attribution.
 
-    If `docs` already carries `simhash`/`bands` columns (the checkpointed
-    path precomputes them per input partition so a resume never re-signs
-    unchanged partitions), the fused signature UDF is skipped and the pair
-    generators read the precomputed features; rows with null simhash are
-    docs that produced no tokens (the same set the UDF path filters with
-    size(_tok) > 0)."""
+    If `docs` already carries `simhash`/`bands` (and `sfps`) columns (the
+    checkpointed path precomputes them per input partition so a resume
+    never re-signs unchanged partitions), the signature and winnow UDFs are
+    skipped and the pair generators read the precomputed features; rows
+    with null simhash are docs that produced no tokens (the same set the
+    UDF path filters with size(_tok) > 0).
+
+    `buckets`, when given, is a (channel, bkey) frame: each channel then
+    semi-joins its `channel_keys` rows on its listed keys before pair
+    generation, so only docs in those buckets pair, over the buckets' full
+    membership — a resumed run regenerating its stale buckets. The caller
+    must have refused every bucket over the exhaustive caps (the
+    incremental ultra-hot guard), so the suffix channel verifies each
+    bucket whole and plans no salted star tier."""
     from dedup_spark.operators.exact import exact_dup_members
+
+    def keyed(src: DataFrame, channel: str) -> DataFrame:
+        keys = channel_keys(src, config, channel)
+        if buckets is None:
+            return keys
+        listed = buckets.filter(F.col("channel") == channel).select("bkey")
+        return keys.join(listed, "bkey", "left_semi")
 
     null_ghash = F.lit(None).cast("long").alias("ghash")
     all_pairs = []
 
     if "exact" in channels:
-        m = exact_dup_members(docs, id_col="id", text_col="text", config=config)
+        m = exact_dup_members(
+            keyed(docs.select("id", "text"), "exact"),
+            id_col="id", text_col="text", config=config,
+        )
         all_pairs.append(
             m.filter(F.col("id") != F.col("exact_cluster_id")).select(
                 F.least("exact_cluster_id", "id").alias("id_a"),
@@ -240,16 +320,14 @@ def channel_pair_sets(
         )
         feats = spill(feats, config, "feats")
 
-    near_cands = []
-    if "minhash" in channels:
-        # band keys precomputed inside the fused UDF (numpy) — the JVM
-        # xxhash64(slice(...)) transform was interpreted per band and flat
-        # across core counts
-        banded = feats.select("id", F.col("bands").alias("band_keys"))
-        near_cands.append(lsh_candidate_pairs(banded, config, channel="minhash"))
-    if "simhash" in channels:
-        sims = feats.select("id", "simhash")
-        near_cands.append(simhash_candidate_pairs(sims, config))
+    # band keys are precomputed inside the fused UDF (numpy) — the JVM
+    # xxhash64(slice(...)) transform was interpreted per band and flat
+    # across core counts
+    near_cands = [
+        near_bucket_pairs(keyed(feats.select("id", feat), ch), config, ch)
+        for ch, feat in (("minhash", "bands"), ("simhash", "simhash"))
+        if ch in channels
+    ]
     if near_cands:
         # dedupe candidates across channels (keep highest-priority
         # provenance) BEFORE verification, so the expensive join against the
@@ -271,15 +349,21 @@ def channel_pair_sets(
 
     if "suffix" in channels:
         from dedup_spark.operators.lsh import PAIR_CAP_ALL
-        from dedup_spark.operators.suffix import suffix_repeat_pairs
+        from dedup_spark.operators.suffix import (
+            suffix_bucket_pairs,
+            suffix_fingerprints,
+        )
 
         # star topology on hot fingerprint buckets: CC only needs
         # connectivity. Precomputed per-doc winnow fingerprints (the
         # checkpointed path stores them per partition) skip the O(tokens)
         # winnow UDF here entirely.
-        sp = suffix_repeat_pairs(
-            docs, config, pair_cap_all=PAIR_CAP_ALL,
-            fps_col="sfps" if "sfps" in docs.columns else None,
+        fps = suffix_fingerprints(
+            docs, config, fps_col="sfps" if "sfps" in docs.columns else None
+        )
+        sp = suffix_bucket_pairs(
+            keyed(fps, "suffix"), docs, config,
+            pair_cap_all=PAIR_CAP_ALL if buckets is None else None,
         ).select(
             "id_a", "id_b", "channel",
             F.lit(None).cast("double").alias("jaccard"), null_ghash,
@@ -294,26 +378,18 @@ def channel_pair_sets(
 
 def merge_near_candidates(near_cands: list[DataFrame]) -> DataFrame:
     """Union the minhash/simhash candidate sets keeping highest-priority
-    provenance (minhash > simhash), so the expensive verify join runs ONCE
+    provenance (CHANNEL_PRIORITY), so the expensive verify join runs ONCE
     over the union instead of once per channel. Priority rides a primitive
-    int min decoded after: a string-buffered min_by(channel, _p) cannot use
-    HashAggregate's mutable fixed-width buffer and plans a SortAggregate."""
+    int min decoded after (see _channel_rank)."""
     cand = near_cands[0]
     for c in near_cands[1:]:
         cand = cand.unionByName(c)
     if len(near_cands) > 1:
-        prio = F.when(F.col("channel") == "minhash", 1).otherwise(2)
         cand = (
-            cand.select("id_a", "id_b", prio.alias("_p"))
+            cand.select("id_a", "id_b", _channel_rank("channel").alias("_p"))
             .groupBy("id_a", "id_b")
             .agg(F.min("_p").alias("_p"))
-            .select(
-                "id_a",
-                "id_b",
-                F.when(F.col("_p") == 1, "minhash")
-                .otherwise("simhash")
-                .alias("channel"),
-            )
+            .select("id_a", "id_b", _channel_name("_p").alias("channel"))
         )
     return cand
 
@@ -351,33 +427,18 @@ def verify_near_candidates(
 
 def merge_channel_pairs(pairs: DataFrame) -> DataFrame:
     """Cross-channel dedup keeping highest-priority provenance
-    (exact > minhash > simhash > suffix). Priority is an int min + decode,
-    NOT min_by(channel, prio): a string-buffered min_by can't use the
-    mutable fixed-width HashAggregate buffer, so Catalyst plans a
-    SortAggregate — a full sort of the pair stream."""
-    prio = (
-        F.when(F.col("channel") == "exact", 0)
-        .when(F.col("channel") == "minhash", 1)
-        .when(F.col("channel") == "simhash", 2)
-        .otherwise(3)
-    )
+    (CHANNEL_PRIORITY) and the max jaccard. Priority is an int min + decode
+    (see _channel_rank)."""
     return (
-        pairs.select("id_a", "id_b", prio.alias("_prio"), "jaccard")
+        pairs.select(
+            "id_a", "id_b", _channel_rank("channel").alias("_prio"), "jaccard"
+        )
         .groupBy("id_a", "id_b")
         .agg(
             F.min("_prio").alias("_prio"),
             F.max("jaccard").alias("jaccard"),
         )
-        .select(
-            "id_a",
-            "id_b",
-            F.when(F.col("_prio") == 0, "exact")
-            .when(F.col("_prio") == 1, "minhash")
-            .when(F.col("_prio") == 2, "simhash")
-            .otherwise("suffix")
-            .alias("channel"),
-            "jaccard",
-        )
+        .select("id_a", "id_b", _channel_name("_prio").alias("channel"), "jaccard")
     )
 
 
@@ -385,18 +446,17 @@ def candidate_and_verified_pairs(
     docs: DataFrame, config: DedupConfig, channels: tuple[str, ...]
 ) -> DataFrame:
     """docs(id, text) -> verified pairs (id_a, id_b, channel, jaccard) from
-    all enabled channels, deduped with channel priority exact > minhash >
-    simhash (see channel_pair_sets for the per-channel semantics)."""
+    all enabled channels, deduped with channel priority CHANNEL_PRIORITY
+    (see channel_pair_sets for the per-channel semantics)."""
     return merge_channel_pairs(channel_pair_sets(docs, config, channels))
 
 
 def run_dedup(
     pages: DataFrame,
     config: DedupConfig = DEFAULT_CONFIG,
-    channels: tuple[str, ...] = ("exact", "minhash", "simhash"),
+    channels: tuple[str, ...] = DEFAULT_CHANNELS,
 ) -> DedupResult:
-    if config.suffix_enabled and "suffix" not in channels:
-        channels = channels + ("suffix",)
+    channels = enabled_channels(config, channels)
     # checkpointed path: per-partition precomputed features ride the input
     # (see plans/checkpoint.py) and must survive ingest/id-assignment so the
     # pair generators can skip the signature UDF on resume

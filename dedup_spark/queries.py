@@ -674,10 +674,7 @@ def s10_stream_first_seen(spark, sf_dir):
 # appends itself to the index; no per-key Python state). The oracle replays
 # the flow relationally: shared-shingle candidates + unrounded-IEEE Jaccard
 # filter (the pipeline `near` semantics), so the driver value-checks the
-# streaming path against the batch channel. The stateful-state twin
-# (stream_near_dup_candidates) is equivalence- and cross-batch-pinned in
-# tests/test_streaming.py; its per-shingle-group Python overhead makes it
-# the exactness/TTL variant, not the scale path (BENCH/stream_neardup.json).
+# streaming path against the batch channel.
 def s11_stream_near_dups(spark, sf_dir, threshold: float = 0.7):
     import tempfile
 

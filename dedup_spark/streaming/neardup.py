@@ -1,23 +1,19 @@
-"""Streaming near-dup front door — the SCALE path (foreachBatch incremental
-index).
+"""Streaming near-dup front door (foreachBatch incremental index).
 
-Two designs exist for cross-batch near-dup detection and we measured both:
+Every micro-batch runs plain JVM batch plans (the same fused shingle UDF +
+8-byte-hash equi-joins as the batch engine) against a growing parquet
+shingle index, then appends itself to the index. No per-key Python, no
+Python state; cross-batch pairs appear when their later member's batch
+arrives, within-batch pairs immediately, and no pair repeats (index x index
+is never re-joined). State is the on-disk index — prunable by event time
+for a TTL (a watermark trade applied as an index filter).
 
-1. `stateful.stream_near_dup_candidates` — applyInPandasWithState keyed by
-   shingle hash. Semantically exact and TTL-bounded, but the state API pays
-   a per-GROUP Python invocation (~100 µs), and shingle-granular keys mean
-   ~130 groups per page: measured 17 pages/s on 8 cores at 6k pages
-   (BENCH/stream_neardup.json). Keep per-key state for DOC-granular keys
-   (content hash: `stream_first_seen`); never for token/shingle-granular
-   keys.
-2. THIS module — `foreachBatch`: every micro-batch runs plain JVM batch
-   plans (the same fused shingle UDF + 8-byte-hash equi-joins as the batch
-   engine) against a growing parquet shingle index, then appends itself to
-   the index. No per-key Python, no Python state; cross-batch pairs appear
-   when their later member's batch arrives, within-batch pairs immediately,
-   and no pair repeats (index x index is never re-joined). State is the
-   on-disk index — prunable by event time for a TTL (the same watermark
-   trade as the stateful path, applied as an index filter).
+Per-key Python state (applyInPandasWithState) pays a per-GROUP Python
+invocation (~100 µs); shingle-granular keys mean ~130 groups per page, and
+a shingle-keyed stateful design measured 17 pages/s on 8 cores at 6k pages
+(BENCH/stream_neardup.json). Keep per-key state for DOC-granular keys
+(content hash: `stateful.stream_first_seen`); never for token/shingle-
+granular keys.
 
 Per-batch cost grows with the index (delta-vs-base, like
 `curation.incremental_near_dups`); at a real crawl front door the index

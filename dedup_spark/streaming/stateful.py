@@ -111,96 +111,3 @@ def stream_first_seen(
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
 
-
-_PAIR_OUT_SCHEMA = "url_a string, url_b string"
-_PAIR_STATE_SCHEMA = "members array<string>"
-
-
-def stream_near_dup_candidates(
-    stream: DataFrame,
-    config: DedupConfig = DEFAULT_CONFIG,
-    watermark: str = "1 hour",
-    state_ttl_ms: int = 24 * 3600 * 1000,
-    bucket_cap: int = 64,
-) -> DataFrame:
-    """Cross-micro-batch NEAR-dup candidate pairs — the streaming front half
-    of the shared-shingle channel (`stream_first_seen` only catches exact
-    copies; drifting boilerplate needs shingle overlap).
-
-    Every arriving page explodes into its distinct k-window shingle hashes
-    (the SAME window polynomial as the batch engine — `shingle_hashes_udf`,
-    bit-identical arrays); per shingle-hash bucket, `applyInPandasWithState`
-    keeps the urls seen so far and emits (url_a, url_b) the FIRST time two
-    docs meet in that bucket. Downstream, a micro-batch (or batch) verifier
-    rescopes candidates to exact Jaccard >= threshold — the streaming-
-    candidates + batch-rescore split that keeps streaming state to 8-byte-
-    keyed url lists instead of shingle sets.
-
-    Candidate recall equals the batch shared-shingle generator's (J > 0
-    requires a shared shingle) with two documented, surfaced bounds:
-    - `bucket_cap`: a bucket that reaches cap stops admitting members, so
-      later arrivals sharing ONLY saturated shingles pair with nobody —
-      the streaming twin of the batch star tier / `max_shingle_df`
-      boilerplate trade (a >cap-df shingle is boilerplate by definition).
-    - event-time TTL: state evicted at watermark + `state_ttl_ms`; a pair
-      straddling more than the TTL window is missed — the boundedness that
-      lets state stay O(active shingles), not O(corpus).
-    The same pair may surface from several buckets (docs share many
-    shingles); the consumer dedups — same contract as the batch pair
-    generators.
-    """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from dedup_spark.functions.signatures import (
-        shingle_hashes_udf,
-        token_hashes,
-    )
-
-    def emit(key, pdfs, state):
-        import pandas as pd
-
-        if state.hasTimedOut:
-            state.remove()
-            return
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf = pdf.sort_values(["warc_ts", "url"], ignore_index=True)
-        members = list(state.get[0]) if state.exists else []
-        seen = set(members)
-        out_a: list[str] = []
-        out_b: list[str] = []
-        for u in pdf["url"].astype(str):
-            if u in seen:
-                continue  # same url re-visiting the bucket: no self pair
-            if len(members) < bucket_cap:
-                for m in members:
-                    a, b = (m, u) if m < u else (u, m)
-                    out_a.append(a)
-                    out_b.append(b)
-                members.append(u)
-                seen.add(u)
-            # else: saturated bucket — admit nothing, emit nothing (the
-            # boilerplate-shingle trade documented above)
-        state.update((members,))
-        state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + state_ttl_ms)
-        if out_a:
-            yield pd.DataFrame({"url_a": out_a, "url_b": out_b})
-
-    src = stream
-    if config.drop_empty_text:
-        src = src.filter(F.regexp_replace(F.col("text"), r"\s+", "") != "")
-    exploded = (
-        src.select(
-            "url",
-            "warc_ts",
-            shingle_hashes_udf(config)(token_hashes("text")).alias("_sh"),
-        )
-        .select("url", "warc_ts", F.explode("_sh").alias("shingle_hash"))
-        .withWatermark("warc_ts", watermark)
-    )
-    return exploded.groupBy("shingle_hash").applyInPandasWithState(
-        emit,
-        outputStructType=_PAIR_OUT_SCHEMA,
-        stateStructType=_PAIR_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )

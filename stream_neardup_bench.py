@@ -1,16 +1,10 @@
 #!/usr/bin/env python
 """Streaming near-dup front door (s11) at size: replay a corpus in
-micro-batches and report sustained pages/s.
+micro-batches through the foreachBatch path (per-batch JVM shingle
+equi-joins vs the accumulated parquet index, streaming/neardup.py) and
+report sustained pages/s.
 
---mode foreachbatch (default, the scale path): per-batch JVM shingle
-  equi-joins vs the accumulated parquet index (streaming/neardup.py).
---mode stateful: the applyInPandasWithState shingle-bucket operator —
-  keyed at shingle granularity (~130 groups/page), it pays the state API's
-  per-GROUP Python invocation; measured 17 pages/s at 6k pages on 8 cores,
-  which is the documented reason it is the exactness/TTL variant and not
-  the scale path.
-
-    taskset -c 0-7 python stream_neardup_bench.py [--rows 60000] [--mode ...]
+    taskset -c 0-7 python stream_neardup_bench.py [--rows 60000]
 """
 
 from __future__ import annotations
@@ -27,18 +21,13 @@ def main() -> None:
     ap.add_argument("--rows", type=int, default=60_000)
     ap.add_argument("--cores", type=int, default=8)
     ap.add_argument("--batches", type=int, default=4)
-    ap.add_argument(
-        "--mode", choices=["foreachbatch", "stateful"], default="foreachbatch"
-    )
     args = ap.parse_args()
 
     from pyspark.sql import functions as F
 
     from dedup_spark.config import DedupConfig
-    from dedup_spark.functions.signatures import shingle_hashes_udf, token_hashes
     from dedup_spark.session import build_session
-    from dedup_spark.streaming.ingest import run_stream_to_parquet
-    from dedup_spark.streaming.stateful import stream_near_dup_candidates
+    from dedup_spark.streaming.neardup import run_stream_near_dups
     from dedup_spark.testdata import synth_pages_spark
 
     spark = build_session(
@@ -69,57 +58,15 @@ def main() -> None:
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{base}/src")
     )
-    if args.mode == "foreachbatch":
-        from dedup_spark.streaming.neardup import run_stream_near_dups
-
-        t0 = time.time()
-        run_stream_near_dups(stream, f"{base}/w", threshold=0.7, config=cfg)
-        t_stream = time.time() - t0
-        n_verified = spark.read.parquet(f"{base}/w/pairs").count()
-        print(json.dumps({
-            "mode": "foreachbatch", "rows": n, "batches": args.batches,
-            "verified_pairs": n_verified, "stream_s": round(t_stream, 1),
-            "pages_per_sec": round(n / t_stream, 1), "cores": args.cores,
-        }))
-    else:
-        t0 = time.time()
-        dropped = run_stream_to_parquet(
-            stream_near_dup_candidates(stream, cfg, watermark="240 hours"),
-            f"{base}/out", f"{base}/ck",
-        )
-        t_stream = time.time() - t0
-        cand = (
-            spark.read.parquet(f"{base}/out")
-            .select(
-                F.least("url_a", "url_b").alias("url_a"),
-                F.greatest("url_a", "url_b").alias("url_b"),
-            )
-            .distinct()
-        )
-        t1 = time.time()
-        sh = docs.select(
-            "url", shingle_hashes_udf(cfg)(token_hashes("text")).alias("_sh")
-        )
-        a = sh.select(F.col("url").alias("url_a"), F.col("_sh").alias("_sa"))
-        b = sh.select(F.col("url").alias("url_b"), F.col("_sh").alias("_sb"))
-        inter = F.size(F.array_intersect("_sa", "_sb"))
-        union = F.size("_sa") + F.size("_sb") - inter
-        n_cand = cand.count()
-        n_verified = (
-            cand.join(a, "url_a").join(b, "url_b")
-            .filter((inter.cast("double") / union) >= 0.7)
-            .count()
-        )
-        t_verify = time.time() - t1
-        print(json.dumps({
-            "mode": "stateful", "rows": n, "batches": args.batches,
-            "dropped_by_watermark": dropped,
-            "candidate_pairs": n_cand, "verified_pairs": n_verified,
-            "stream_s": round(t_stream, 1), "verify_s": round(t_verify, 1),
-            "pages_per_sec_stream": round(n / t_stream, 1),
-            "pages_per_sec_e2e": round(n / (t_stream + t_verify), 1),
-            "cores": args.cores,
-        }))
+    t0 = time.time()
+    run_stream_near_dups(stream, f"{base}/w", threshold=0.7, config=cfg)
+    t_stream = time.time() - t0
+    n_verified = spark.read.parquet(f"{base}/w/pairs").count()
+    print(json.dumps({
+        "mode": "foreachbatch", "rows": n, "batches": args.batches,
+        "verified_pairs": n_verified, "stream_s": round(t_stream, 1),
+        "pages_per_sec": round(n / t_stream, 1), "cores": args.cores,
+    }))
     shutil.rmtree(base, ignore_errors=True)
 
 

@@ -420,3 +420,56 @@ def test_fallback_reason_lands_in_metrics(
     n = len(rows)
     run_dedup_checkpointed(edited, config, root)
     assert len(_mode_rows()) == n
+
+
+@pytest.fixture(scope="module")
+def featured(spark, pages, config):
+    """The pages fixture as a suffix-on prepared stage: ingested rows with
+    the stored per-doc features (simhash, bands, sfps) the pairs stage
+    reads, keyed by url."""
+    from dataclasses import replace
+
+    from dedup_spark.plans.checkpoint import prepare_pages
+
+    cfg = replace(config, suffix_enabled=True)
+    prepared = prepare_pages(pages, cfg, source="all").persist()
+    prepared.count()
+    yield cfg, prepared
+    prepared.unpersist()
+
+
+def _pair_rows(df):
+    # (id_a, id_b, channel) is unique per row, so the sort never compares
+    # a null jaccard
+    return sorted((tuple(r) for r in df.collect()), key=lambda r: r[:3])
+
+
+def test_bucket_restriction_equals_unrestricted_pair_build(featured):
+    """channel_pair_sets restricted to every pair-capable bucket of every
+    channel (the bucket fingerprints' keys) emits exactly the unrestricted
+    pair set, and restricting to one channel's keys emits only that
+    channel's pairs — the same rows as building that channel alone."""
+    from dedup_spark.plans.incremental import bucket_fingerprints
+    from dedup_spark.plans.pipeline import channel_pair_sets, enabled_channels
+
+    cfg, prepared = featured
+    docs = prepared.select(
+        F.col("url").alias("id"), "text", "simhash", "bands", "sfps"
+    )
+    channels = enabled_channels(cfg)
+    assert channels == ("exact", "minhash", "simhash", "suffix")
+    buckets = bucket_fingerprints(prepared, cfg).select("channel", "bkey")
+    buckets.persist().count()
+
+    full = _pair_rows(channel_pair_sets(docs, cfg, channels))
+    assert {"exact", "minhash", "suffix"} <= {r[2] for r in full}
+    assert _pair_rows(channel_pair_sets(docs, cfg, channels, buckets=buckets)) == full
+
+    only = channel_pair_sets(
+        docs, cfg, channels,
+        buckets=buckets.filter(F.col("channel") == "simhash"),
+    )
+    got = _pair_rows(only)
+    assert got and {r[2] for r in got} == {"simhash"}
+    assert got == _pair_rows(channel_pair_sets(docs, cfg, ("simhash",)))
+    buckets.unpersist()

@@ -5,10 +5,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from dedup_spark.operators.lsh import (
-    pairs_from_buckets,
-    salted_pairs_from_buckets,
-)
+from dedup_spark.operators.lsh import salted_pairs_from_buckets
+from lsh_reference import pairs_from_buckets
 
 
 def _components(pair_rows):

@@ -209,77 +209,6 @@ def test_watermark_drop_is_surfaced_and_sized_watermark_keeps_all(
     assert dropped_wide == 0 and kept_wide == 4
 
 
-def test_stream_near_dup_candidates_cross_batch(spark, config, tmp_path):
-    """The shingle-bucket state carries across micro-batches: a near-dup of
-    a batch-1 page arriving in batch 2 pairs with it; an unrelated page
-    pairs with nobody; the same pair surfacing from many shared shingles
-    dedups to one."""
-    import datetime
-    import time
-
-    from dedup_spark.streaming.stateful import stream_near_dup_candidates
-
-    src, out, ckpt = str(tmp_path / "s"), str(tmp_path / "o"), str(tmp_path / "c")
-    schema = (
-        "url string, warc_ts timestamp, html binary, text string, "
-        "lang string, source string"
-    )
-    ts = datetime.datetime(2024, 1, 1)
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    b1 = spark.createDataFrame(
-        [("u1", ts, None, base, "en", "s"),
-         ("u9", ts, None, "totally different words nothing shared at all xx",
-          "en", "s")], schema
-    )
-    b2 = spark.createDataFrame(
-        [("u2", ts + datetime.timedelta(minutes=10), None, base + " lambda",
-          "en", "s")], schema
-    )
-    b1.coalesce(1).write.mode("append").parquet(src)
-    time.sleep(1.2)
-    b2.coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    run_stream_to_parquet(stream_near_dup_candidates(stream, config), out, ckpt)
-    pairs = {
-        tuple(sorted((r.url_a, r.url_b)))
-        for r in spark.read.parquet(out).collect()
-    }
-    assert ("u1", "u2") in pairs
-    assert all("u9" not in p for p in pairs)
-
-
-def test_stream_near_dup_bucket_cap_saturates(spark, config, tmp_path):
-    """A bucket at cap admits no new members: with bucket_cap=2 the third
-    doc sharing the same shingles pairs with nobody (the boilerplate
-    trade), while the first two still pair."""
-    import datetime
-
-    from dedup_spark.streaming.stateful import stream_near_dup_candidates
-
-    src, out, ckpt = str(tmp_path / "s"), str(tmp_path / "o"), str(tmp_path / "c")
-    schema = (
-        "url string, warc_ts timestamp, html binary, text string, "
-        "lang string, source string"
-    )
-    ts = datetime.datetime(2024, 1, 1)
-    text = "one two three four five six seven"
-    rows = [(f"u{i}", ts + datetime.timedelta(minutes=i), None, text, "en", "s")
-            for i in range(3)]
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
-    stream = spark.readStream.schema(schema).parquet(src)
-    run_stream_to_parquet(
-        stream_near_dup_candidates(stream, config, bucket_cap=2), out, ckpt
-    )
-    pairs = {
-        tuple(sorted((r.url_a, r.url_b)))
-        for r in spark.read.parquet(out).collect()
-    }
-    assert pairs == {("u0", "u1")}
-
-
 def test_foreachbatch_near_dup_matches_batch(spark, config, tmp_path):
     """The foreachBatch incremental-index path over a multi-batch replay
     finds EXACTLY the batch engine's shared-shingle J>=0.7 pairs — within-
